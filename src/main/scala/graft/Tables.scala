@@ -111,9 +111,12 @@ object Tables {
     * most one of `words`, so the per-word occurrence counts sum to the
     * membership count. Sized for SHORT lists (the 3-5-word stopword
     * profiles): each word is one O(n) codegen'd pass over the array.
+    * A null `toks` gives null (ANSI `size`); `words` must be non-empty.
     */
-  def occurrenceCount(toks: Column, words: Seq[String]): Column =
+  def occurrenceCount(toks: Column, words: Seq[String]): Column = {
+    require(words.nonEmpty, "occurrenceCount: words must be non-empty")
     words.map(w => size(toks) - size(array_remove(toks, w))).reduce(_ + _)
+  }
 
   /** Best-effort recursive delete for per-run temp scaffolding (staging
     * slices, accumulated stores, checkpoints). Never throws: a half-deleted

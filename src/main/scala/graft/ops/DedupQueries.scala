@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.Tables.load
-import graft.functions.RollingHash
+import graft.functions.{MinhashSig, RollingHash}
 
 /** Sketch-based near-duplicate detection over `documents` — the full-corpus
   * scale path that [[TextQueries.dedupJaccardTokens]]'s exact pairwise join
@@ -26,7 +26,7 @@ import graft.functions.RollingHash
   */
 object DedupQueries {
 
-  private[ops] val NumPerms = 64
+  private[graft] val NumPerms = 64
   private[graft] val MinhashBands = 16 // 16 bands × 4 rows
   private val SimhashBits = 30 // bits 0..29 of a mod-(2^31-1) hash
   private val SimhashBands = 3 // 3 bands × 10 bits
@@ -36,15 +36,15 @@ object DedupQueries {
     * a·h never overflows checked BIGINT, large enough that collisions are
     * negligible against a real vocabulary.
     */
-  private val TokMod = 1048573L
-  private[ops] val P = 2147483647L // 2^31 - 1, prime
+  private[graft] val TokMod = 1048573L
+  private[graft] val P = 2147483647L // 2^31 - 1, prime
   private[ops] val BandMod = 1099511627776L // 2^40: acc·8191 + m stays < 2^53
 
   /** Deterministic permutation constants, shared verbatim by the Spark plan
     * and the generated oracle SQL (computed once here — they cannot drift).
     */
-  private[ops] def permA(s: Int): Long = (s.toLong * 2654435761L) % (P - 1) + 1
-  private[ops] def permB(s: Int): Long = (s.toLong * 1779033703L + 1013904223L) % P
+  private[graft] def permA(s: Int): Long = (s.toLong * 2654435761L) % (P - 1) + 1
+  private[graft] def permB(s: Int): Long = (s.toLong * 1779033703L + 1013904223L) % P
   private val SimA = permA(101)
   private val SimB = permB(101)
 
@@ -121,7 +121,7 @@ object DedupQueries {
     * (doc_id, lang, tok) frame — for pipelines that tokenize once and
     * share the token frame across stages (pipeline_curate_v2's near-dup
     * stage explodes its shared token arrays into this). Fully codegen'd
-    * (hash + 64 min partial-aggs), unlike the row-local HOF form.
+    * (hash + 64 min partial-aggs).
     */
   def minhashSignaturesFromToks(toks: DataFrame): DataFrame = {
     val hashed = toks.withColumn("h", tokHash(col("tok")))
@@ -134,15 +134,16 @@ object DedupQueries {
 
   /** Row-local MinHash LSH band keys: the same 64-perm signature and
     * 16×4 band hashes as [[minhashSignatures]] + the banding in
-    * `dedup_minhash_lsh`, but computed entirely WITHIN each row (array
-    * transforms over the token array — no explode + per-doc shuffle
-    * aggregate). Value-identical to the batch path by construction: both
-    * take min over the same permutations of the same distinct-token
-    * hashes. This is the form a STREAMING gate needs — a per-doc shuffle
+    * `dedup_minhash_lsh`, but computed entirely WITHIN each row (the
+    * [[graft.functions.MinhashSig]] kernel over the token array — no
+    * explode + per-doc shuffle aggregate). Value-identical to the batch
+    * path by construction: both take min over the same permutations of
+    * the same distinct-token hashes. This is the form a STREAMING gate needs — a per-doc shuffle
     * aggregate before a stateful operator is either disallowed or a
     * second stateful op, while a row-local projection composes freely.
-    * Row cost is NumPerms passes over the token array, the same work the
-    * batch map-side partial aggregate does per exploded token.
+    * Row cost is one codegen'd pass over the token array plus NumPerms
+    * permutations per distinct token hash, the same arithmetic the batch
+    * map-side partial aggregate does per exploded token.
     *
     * `bands` sets the r/b precision knob: a band collides when all
     * NumPerms/bands of its signature rows match, i.e. with probability
@@ -169,20 +170,9 @@ object DedupQueries {
     * once and share the token frame across stages (pipeline_curate_v2);
     * same permutations, same constants, value-identical by construction.
     */
-  def rowLocalSignaturesFromToks(toks: DataFrame): DataFrame = {
-    val hashed = toks.select(col("doc_id"), col("lang"),
-      transform(array_distinct(col("t")), t => tokHash(t)).as("hs"))
-    hashed.select(col("doc_id"), col("lang"),
-      array((0 until NumPerms).map(s => array_min(transform(col("hs"),
-        h => (lit(permA(s)) * h + lit(permB(s))) % lit(P)))): _*).as("sig"))
-  }
+  def rowLocalSignaturesFromToks(toks: DataFrame): DataFrame =
+    toks.select(col("doc_id"), col("lang"), MinhashSig(col("t")).as("sig"))
 
-  /** LSH band keys from a stored signature array — the banding half of
-    * [[minhashBandKeys]], reusable over signatures that were persisted
-    * rather than just computed (the incremental gate's store). Same fold
-    * constants as [[bandSelectsSql]], so every consumer stays
-    * oracle-aligned.
-    */
   /** THE band fold over a `sig` array column — one LSH band hash,
     * (acc·8191 + sig[b·rows+i]) mod [[BandMod]] across the band's rows.
     * Defined ONCE for every Spark-side banding consumer (the SQL twin is
@@ -195,6 +185,8 @@ object DedupQueries {
         lit(BandMod)
     }
 
+  /** LSH band keys from a `sig` array column, computed or persisted — the
+    * banding half of [[minhashBandKeys]], one [[bandHash]] per band. */
   def bandsFromSig(sigs: DataFrame, bands: Int): DataFrame = {
     val rows = NumPerms / bands
     sigs.select(col("doc_id"), col("lang"), explode(array(

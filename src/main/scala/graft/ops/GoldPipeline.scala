@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Source
@@ -52,8 +53,13 @@ object GoldPipeline {
   def ctasGold(spark: SparkSession, table: String): DataFrame = {
     // CREATE OR REPLACE TABLE needs a v2 catalog (Delta's); the v1 session
     // catalog used here only supports plain CTAS, so OR REPLACE is emulated —
-    // same full-overwrite semantics.
-    spark.sql(s"DROP TABLE IF EXISTS $table")
+    // same full-overwrite semantics. A new session on a reused warehouse
+    // has a catalog that forgot the table but not its managed directory,
+    // which CTAS refuses (LOCATION_ALREADY_EXISTS): clear it too.
+    val catalog = spark.sessionState.catalog
+    val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
+    if (catalog.tableExists(id)) spark.sql(s"DROP TABLE $table")
+    else graft.Tables.deleteTree(Paths.get(catalog.defaultTablePath(id)).toString)
     spark.sql(
       s"""CREATE TABLE $table AS
          |SELECT *

@@ -374,10 +374,9 @@ object PipelineQueries {
       // candidates, fold verify, removable = has a smaller-id partner
       val s2 = gophered.filter(col("bucket") <= 1 && col("p_gopher"))
       // batch signature form (explode + 64 min-aggs, fully codegen'd)
-      // over the SHARED token frame — the row-local HOF form exists for
-      // streaming operator composition and evaluates interpreted; here
-      // the extra doc-keyed shuffle is survivor-sized and the codegen
-      // aggregate wins (measured: 9.2 → see BASELINE).
+      // over the SHARED token frame — chosen when the row-local form was
+      // interpreted HOFs (measured: 9.2 → see BASELINE); not re-measured
+      // against the native minhash_sig kernel.
       // r17: repartition the survivors on doc_id BEFORE the token explode —
       // the gophered checkpoint materializes with the AQE-coalesced
       // partitioning of its join (ONE partition at sf0.1), which made this

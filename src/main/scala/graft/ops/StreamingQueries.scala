@@ -1694,13 +1694,13 @@ object StreamingQueries {
     // Two commit rounds per batch instead of one is the price of pruning;
     // measured at sf0.1 it is commit-noise (see BASELINE.md).
     // sig stays ONE array column: a 64-scalar-column store (the batch
-    // verify's shape) was tried and sends the optimizer into a
-    // pathological expression blow-up once projection collapse inlines
-    // the 64 heavy array_min trees into every band fold (minutes of
-    // planning, then OOM); the array form plans instantly and its verify
-    // is one codegen'd SigOverlap loop (native expression since r16 —
-    // the interpreted zip_with fold it replaced cost ~1 s/batch at
-    // sf0.1 and would wall at the 100× verify volume)
+    // verify's shape) was tried when the signature was 64 interpreted
+    // array_min trees, which projection collapse inlined into every band
+    // fold (minutes of planning, then OOM); the native minhash_sig kernel
+    // stays out of the folds (PlanShapeSpec), the array form plans
+    // instantly and its verify is one codegen'd SigOverlap loop (native
+    // expression since r16 — the interpreted zip_with fold it replaced
+    // cost ~1 s/batch at sf0.1 and would wall at the 100× verify volume)
     def enrich(df: DataFrame): DataFrame =
       DedupQueries.rowLocalSignatures(df)
         .withColumn("bands", DedupQueries.bandStructs(Seq(16, 4)))

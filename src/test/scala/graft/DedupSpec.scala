@@ -73,7 +73,7 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("16x4 banding recovers >= 99% of the exact verified-truth pair set (fixture)") {
-    // The contract tools/TextBandAB measured at sf0.1 (recall 0.99993 vs
+    // The contract the band-shape A/B measured at sf0.1 (recall 0.99993 vs
     // the banding-independent truth; 8x8 drops to 0.729 — BASELINE r16),
     // gated here at sf0.001 so a band-shape or band-hash regression fails
     // CI instead of silently shrinking every minhash family's held set.

@@ -19,6 +19,23 @@ class GoldSinkSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS gold_test_ctas")
   }
 
+  test("ctasGold replaces a table left in the warehouse by an earlier session") {
+    // each session gets its own shared state, so its in-memory catalog
+    // starts empty while the application warehouse, and the managed table
+    // directory an earlier session wrote there, stay — as for a new process
+    def freshSession() = classOf[org.apache.spark.sql.classic.SparkSession]
+      .getConstructor(classOf[org.apache.spark.SparkContext])
+      .newInstance(spark.sparkContext)
+    val csv = CsvSource(s"${ops.ParityQueries.FixtureDir}/brfss.csv")
+    val sessions = Seq(freshSession(), freshSession())
+    for (s <- sessions) {
+      assert(!s.catalog.tableExists("gold_shared_wh"))
+      val gold = GoldPipeline.run(s, csv)
+      assert(GoldPipeline.ctasGold(s, "gold_shared_wh").count() === gold.count())
+    }
+    sessions.last.sql("DROP TABLE gold_shared_wh") // managed: drops its files
+  }
+
   test("config layer resolves widget-equivalent parameters from env") {
     val cfg = GraftConfig.fromEnv(_ => None)
     assert(cfg.dataSource === "BLOB")

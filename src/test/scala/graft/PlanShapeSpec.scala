@@ -153,6 +153,17 @@ class PlanShapeSpec extends AnyFunSuite {
       s"benchmark band join lost its broadcast+fused-verify shape:\n$plan")
   }
 
+  test("minhash band keys: one native minhash_sig per row projection, no lambdas") {
+    val plan = graft.ops.DedupQueries
+      .minhashBandKeys(Tables.load(spark, sfDir, "documents"), 4)
+      .queryExecution.executedPlan.toString
+    // a HOF fallback evaluates interpreted; an inlined kernel (projection
+    // collapse into the 64 element_at band reads) would run it per read
+    assert(!plan.contains("lambdafunction"), s"signature fell back to HOFs:\n$plan")
+    assert("minhash_sig\\(".r.findAllMatchIn(plan).size === 1,
+      s"minhash_sig is not computed exactly once per row:\n$plan")
+  }
+
   test("vector_outliers: top-k plans as TakeOrderedAndProject, not a global sort") {
     val plan = planOf("vector_outliers")
     assert(plan.contains("TakeOrderedAndProject"), plan)

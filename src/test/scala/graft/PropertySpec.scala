@@ -109,6 +109,59 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("minhash_sig: interpreted == codegen == HOF reference, nulls included") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import graft.functions.MinhashSig
+    import graft.ops.DedupQueries
+    // the pre-kernel row-local form, kept here as the reference only
+    def hofSig(t: org.apache.spark.sql.Column) = {
+      val hs = transform(array_distinct(t),
+        x => graft.functions.RollingHash(x) % DedupQueries.TokMod)
+      array((0 until DedupQueries.NumPerms).map(s => array_min(transform(hs,
+        h => (lit(DedupQueries.permA(s)) * h + lit(DedupQueries.permB(s))) %
+          lit(DedupQueries.P)))): _*)
+    }
+    // small vocabulary so duplicates are common; "" and nulls as elements;
+    // surrogate pairs exercise the code-point hash
+    val tok = Gen.frequency(8 -> Gen.oneOf("spark", "scan", "join", "a", "Zürich",
+        "😀", "x𐐷y", "∆"), 2 -> Gen.const(""),
+      1 -> Gen.const(null: String), 3 -> Gen.alphaNumStr)
+    val arrays: Seq[Seq[String]] = samples(Gen.listOf(tok), 200) ++
+      Seq(Seq.empty, Seq(null), Seq(null, null), Seq(""), null)
+    val ref = arrays.toDF("t").repartition(3) // no local-relation folding
+      .select($"t", hofSig($"t").as("sig")).collect()
+      .map(r => Option(r.getSeq[String](0)) -> r.getSeq[java.lang.Long](1))
+    assert(ref.length === arrays.length)
+    val expr = MinhashSig(BoundReference(0, ArrayType(StringType), nullable = true))
+    val proj = GenerateUnsafeProjection.generate(Seq(expr), true)
+    def asSeq(a: ArrayData): Seq[java.lang.Long] =
+      (0 until a.numElements()).map(i =>
+        if (a.isNullAt(i)) null else java.lang.Long.valueOf(a.getLong(i)))
+    for ((t, want) <- ref) {
+      val row = InternalRow(t.map(ts => new GenericArrayData(
+        ts.map(s => if (s == null) null else UTF8String.fromString(s)).toArray[Any]))
+        .orNull)
+      assert(asSeq(expr.eval(row).asInstanceOf[ArrayData]) === want,
+        s"interpreted, for $t")
+      assert(asSeq(proj(row).getArray(0)) === want, s"codegen, for $t")
+      assert(want.length === DedupQueries.NumPerms)
+      assert(want.forall(_ == null) === t.forall(_.forall(_ == null)), s"for $t")
+    }
+    // whole-stage codegen path, against the same reference
+    val wsc = arrays.toDF("t").repartition(3).select($"t", MinhashSig($"t").as("sig"))
+    val got = wsc.collect()
+      .map(r => Option(r.getSeq[String](0)) -> r.getSeq[java.lang.Long](1))
+    assert(got.toMap === ref.toMap)
+    assert(wsc.queryExecution.executedPlan.toString.split("\n")
+        .exists(l => l.contains("*(") && l.contains("minhash_sig")),
+      "minhash_sig fell out of whole-stage codegen")
+  }
+
   test("LastValueAggregator result is invariant to input order") {
     val inGen = for {
       ms <- Gen.choose(0L, 100L); id <- Gen.choose(0L, 10000L)

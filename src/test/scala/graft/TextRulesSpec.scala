@@ -71,6 +71,17 @@ class TextRulesSpec extends AnyFunSuite {
     assert(lm.nonEmpty)
   }
 
+  test("occurrenceCount: duplicates count, a null array gives null, no words is rejected") {
+    import spark.implicits._
+    val df = Seq(Some(Seq("the", "a", "the", "x", "")), Some(Seq.empty[String]), None)
+      .toDF("t").repartition(1) // no local-relation folding
+    val got = df.select(Tables.occurrenceCount($"t", Seq("the", "a", "y")))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getInt(0))).toSeq
+    assert(got.sorted === Seq(None, Some(0), Some(3)))
+    val e = intercept[IllegalArgumentException](Tables.occurrenceCount($"t", Nil))
+    assert(e.getMessage.contains("words must be non-empty"))
+  }
+
   test("text_quality_classifier: decile enrichment is monotone in the aggregate") {
     // The trained filter's fitness-for-purpose gate (r14 verdict): a
     // classifier whose score does NOT concentrate label-good docs in the
