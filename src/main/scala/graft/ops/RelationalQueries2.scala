@@ -838,17 +838,17 @@ object RelationalQueries2 {
   /** K-core peeling RUN TO CONVERGENCE (k = 2 on the sparsified slice):
     * the fixed-round [[graphKcore]]'s twin with the loop driven by a
     * fixpoint check instead of a round count — peel until a round removes
-    * no node, bounded by a max-round guard. The convergence scalar is the
-    * keep-set count (an O(1)-result distributed aggregate, the same
-    * discipline as [[graft.ops.TextQueries2.componentLabels]]'s moved-sum);
-    * `|keep_i| == |keep_(i-1)|` implies set equality because keeps are
-    * nested, so the count comparison IS the fixpoint test. The final
-    * nodes/edges are computed relationally from the converged frames — only
-    * the round counter is a driver value, and it is inherent to the loop.
+    * no node, bounded by a max-round guard of 16. The loop is a
+    * [[FusedFixpoint]] over the edge frame with `alive` and `kept` flags.
+    * The convergence scalar counts the rows of nodes leaving the keep set,
+    * an O(1)-result distributed aggregate; the final nodes/edges are
+    * computed relationally from the converged frame — only the round
+    * counter is a driver value, and it is inherent to the loop.
     *
     * Oracle: the peel unrolled to the guard depth (generated SQL — 16
     * rounds of HAVING + induced-subgraph CTEs), with the convergence round
-    * located by the same count-equality rule over the per-round trajectory.
+    * located by the count-equality rule over the per-round trajectory
+    * (|keep_i| == |keep_(i-1)| ⟺ round i removed nothing).
     * Measured rounds: 3 (sf0.001) / 8 (sf0.01) / 10 (sf0.1) — the guard has
     * ≥60% headroom over every tested SF.
     */
@@ -868,90 +868,47 @@ object RelationalQueries2 {
   private[graft] def kcorePeelLoop(edges0: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame,
         org.apache.spark.sql.DataFrame, Long) = {
-    // r18 (JobProfile: 108 jobs/invocation at sf0.1, every one a KB-sized
-    // ~40 ms scheduler round — 3 actions per round × 10 rounds + setup):
-    // TWO peel rounds per materialization, the pagerankLoop/labelPropLoop
-    // fusion applied to the peel. Round 1 stays lazy inside round 2's plan
-    // (endpoint degrees ride the edge rows as unordered windows, so the
-    // peel is a linear filter chain — no keep-table to pin), ONE
-    // localCheckpoint lands both rounds, round 2's keep count reads that
-    // checkpoint, and round 1's keep count is the one extra aggregate over
-    // the PREVIOUS checkpoint (it cannot be read off round 2's frame: a
-    // keep₁ node whose surviving neighbors all peeled has no edge left in
-    // e₁). 3 jobs per 2 rounds instead of 3 per round; the round
-    // accounting replays the one-round loop exactly (the trajectory and
-    // the guard/odd arms are pinned by GraphConvergenceSpec). Superseded
-    // checkpoints are unpersisted as each block lands (the old loop pinned
-    // every round's k and e to JVM exit).
     import org.apache.spark.sql.expressions.Window
-    val wu = Window.partitionBy(col("u"))
-    val wv = Window.partitionBy(col("v"))
-    def flag(e: org.apache.spark.sql.DataFrame) = e
-      .withColumn("du", count(lit(1)).over(wu))
-      .withColumn("dv", count(lit(1)).over(wv))
-    // keep-set of a flagged frame: nodes retaining degree >= 2
-    def keepOf(f: org.apache.spark.sql.DataFrame) =
-      f.filter(col("du") >= 2).select(col("u")).distinct()
-    var e = edges0.localCheckpoint()
-    var pinned = e
-    var nPrev = e.select(col("u")).distinct().count()
-    var rounds = 0L
-    var converged = false
-    var keep = e.select(col("u")).distinct()
-    while (!converged && rounds < 16) {
-      if (rounds + 1 >= 16) { // odd tail at the guard
-        val f = flag(e).localCheckpoint()
-        val n = f.agg(countDistinct(when(col("du") >= 2, col("u"))))
-          .first().getLong(0)
-        rounds += 1
-        keep = keepOf(f)
-        if (n == nPrev) {
-          converged = true // nothing removed: e is already the induced core
-          org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(f)
-        } else {
-          e = f.filter(col("du") >= 2 && col("dv") >= 2)
-            .select(col("u"), col("v"))
-          org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(pinned)
-          pinned = f
-          nPrev = n
-        }
-      } else {
-        val e1 = flag(e).filter(col("du") >= 2 && col("dv") >= 2)
-          .select(col("u"), col("v")) // round 1, lazy: fused into f2's plan
-        val f2 = flag(e1).localCheckpoint()
-        // |keep₁| from the previous checkpoint (see note above); |keep₂|
-        // from f2 — the peel is monotone, so the count comparison IS the
-        // set-equality fixpoint test at both rounds
-        val n1 = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
-          .filter(col("d") >= 2).count()
-        rounds += 1
-        if (n1 == nPrev) {
-          // round 1 removed nothing: e is already the induced core and
-          // round 2 (materialized speculatively — at the fixpoint e1 = e,
-          // so f2 cost one degree pass) is discarded unread
-          converged = true
-          keep = e.groupBy(col("u")).agg(count(lit(1)).as("d"))
-            .filter(col("d") >= 2).select(col("u"))
-          org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(f2)
-        } else {
-          val n2 = f2.agg(countDistinct(when(col("du") >= 2, col("u"))))
-            .first().getLong(0)
-          rounds += 1
-          keep = keepOf(f2)
-          if (n2 == n1) {
-            converged = true // round 2 removed nothing: e1 is the core
-            e = f2.select(col("u"), col("v"))
-          } else {
-            e = f2.filter(col("du") >= 2 && col("dv") >= 2)
-              .select(col("u"), col("v"))
-            nPrev = n2
-          }
-          org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(pinned)
-          pinned = f2
-        }
+    // an endpoint's degree counts its alive edges only
+    def degree(end: String) =
+      sum(col("alive").cast("long")).over(Window.partitionBy(col(end)))
+    val (last, rounds, _) = FusedFixpoint.pinned(
+        edges0.select(col("u"), col("v"))) { edges =>
+      requireSymmetric(edges, "kcorePeelLoop")
+      // a round keeps the rows of every node kept last round, peeled edges
+      // included (alive = false): a kept node whose neighbours all peeled
+      // leaves the keep set one round later without an edge dropping, and
+      // only its rows can show that. A round's metric counts the rows of
+      // nodes leaving the keep set; keeps are nested, so 0 is the oracle's
+      // |keep_i| == |keep_(i-1)| fixpoint test
+      FusedFixpoint(edges.withColumn("alive", lit(true))
+          .withColumn("kept", lit(true)), 16,
+          count(when(!col("kept"), 1)), _ == 0) { s =>
+        s.filter(col("kept"))
+          .withColumn("du", degree("u")).withColumn("dv", degree("v"))
+          .withColumn("kept", col("du") >= 2)
+          .withColumn("alive", col("alive") && col("kept") && col("dv") >= 2)
       }
     }
-    (e, keep, rounds)
+    (last.filter(col("alive")).select(col("u"), col("v")),
+      last.filter(col("kept")).select(col("u")).distinct(), rounds)
+  }
+
+  /** Rejects an edge frame in which some (u, v) lacks its (v, u): the
+    * convergence loops read an undirected graph, and PageRank and label
+    * propagation need an in-edge at every node, or a round's step silently
+    * drops that node's row from the state and from the round's metric. */
+  private[graft] def requireSymmetric(edges: org.apache.spark.sql.DataFrame,
+      loop: String): Unit = {
+    // per unordered pair: is it present forward, backward? (a self-loop is
+    // neither, so it passes)
+    val lo = least(col("u"), col("v"))
+    val hi = greatest(col("u"), col("v"))
+    require(edges.groupBy(lo, hi)
+        .agg(max((col("u") < col("v")).cast("int")).as("fwd"),
+          max((col("u") > col("v")).cast("int")).as("bwd"))
+        .filter(col("fwd") =!= col("bwd")).isEmpty,
+      s"$loop needs a symmetric edge frame: every (u, v) with its (v, u)")
   }
 
   val graphKcoreConverge = QueryDef(
@@ -1024,7 +981,7 @@ $trajectory),
     * doubling — so the loop count is the graph's true propagation depth;
     * the diameter-killing accelerated variant is already proven by
     * [[graft.ops.TextQueries2.componentLabels]]. The moved count rides the
-    * same localCheckpointed pass that steps the labels (one extra column,
+    * same [[FusedFixpoint]] block that steps the labels (one extra column,
     * no second scan). At the fixpoint every node holds its component's
     * minimum id, so the oracle is exact connected components (recursive-CTE
     * min-reach), and the round count is pinned too: sync LP needs
@@ -1060,70 +1017,29 @@ $trajectory),
   }
 
   /** The LP loop, exposed for the fixpoint spec: returns the converged
-    * (node, lbl) table, the checkpointed adjacency, and the round count. */
+    * (node, lbl) table, the adjacency, and the round count. */
   private[graft] def labelPropConvergeState(
       spark: org.apache.spark.sql.SparkSession, dir: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Long) =
     labelPropLoop(sparseTradeEdges(spark, dir))
 
   /** The LP loop over an arbitrary symmetric (u, v) edge frame — the spec
-    * entry point (the fused-loop odd-round test drives a hand path graph
-    * through it).
+    * entry point (the odd-round test drives a hand path graph through it).
+    * Returns the edge frame itself as the adjacency for the spec's extra
+    * superstep.
     */
   private[graft] def labelPropLoop(edges0: org.apache.spark.sql.DataFrame):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Long) = {
-    val adj = edges0
-      .repartition(col("u"))
-      .localCheckpoint() // reused by every round
-    var labels = adj.select(col("u").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint()
-    var moved = 1L
-    var rounds = 0L
-    // r17: TWO supersteps per materialization — the loop's cost is
-    // per-round fixed overhead on KB-sized label tables (the pagerankLoop
-    // measurement), so halving the checkpoint + moved-scalar actions
-    // halves the wall. Superstep 2 consumes superstep 1 lazily in one
-    // bounded-depth plan and carries lbl₁/moved₁ through its merge join,
-    // so one aggregate reads both moved counts and an early exit at
-    // round 1 recovers lbl₁ from the same checkpoint. The round
-    // accounting replays the original one-round loop exactly (the LP
-    // oracle states the fixpoint AND the round count independently).
-    while (moved > 0 && rounds < 40) {
-      if (rounds + 1 >= 40) { // odd tail at the guard
-        val stepped = labelPropStep(adj, labels).localCheckpoint()
-        moved = stepped.agg(coalesce(sum(col("moved")), lit(0L)))
-          .first().getLong(0)
-        rounds += 1
-        labels = stepped.select(col("node"), col("lbl"))
-      } else {
-        val s1 = labelPropStep(adj, labels) // lazy: fused into s2's plan
-        val msgs2 = adj
-          .join(s1.select(col("node").as("v"), col("lbl")), Seq("v"))
-          .groupBy(col("u").as("node")).agg(min(col("lbl")).as("nb"))
-        val s2 = s1.withColumnRenamed("moved", "m1")
-          .join(msgs2, Seq("node"), "left")
-          .select(col("node"), col("lbl").as("lbl1"), col("m1"),
-            least(col("lbl"), coalesce(col("nb"), col("lbl"))).as("lbl2"),
-            (col("nb") < col("lbl")).cast("long").as("m2"))
-          .localCheckpoint()
-        // s1 is a left join over `labels` and s2 a left join over s1, so
-        // both cover the full node set: summing the carried m1 over s2
-        // equals summing it over s1
-        val row = s2.agg(coalesce(sum(col("m1")), lit(0L)),
-          coalesce(sum(col("m2")), lit(0L))).first()
-        rounds += 1
-        moved = row.getLong(0)
-        if (moved > 0 && rounds < 40) { // superstep 2 counts
-          rounds += 1
-          moved = row.getLong(1)
-          labels = s2.select(col("node"), col("lbl2").as("lbl"))
-        } else { // fixpoint confirmed at superstep 1: its labels
-          labels = s2.select(col("node"), col("lbl1").as("lbl"))
-        }
+    // labelPropStep left-joins onto its input labels, so no superstep
+    // drops a node from the state
+    val (labels, rounds, _) =
+      FusedFixpoint.pinned(edges0.repartition(col("u"))) { adj =>
+        requireSymmetric(adj, "labelPropLoop")
+        FusedFixpoint(
+          adj.select(col("u").as("node")).distinct().withColumn("lbl", col("node")),
+          40, sum(col("moved")), _ == 0)(labelPropStep(adj, _))
       }
-    }
-    (labels, adj, rounds)
+    (labels.select(col("node"), col("lbl")), edges0, rounds)
   }
 
   val graphLabelPropConverge = QueryDef(
@@ -1174,15 +1090,14 @@ $trajectory),
     * symmetric, so every node has out- AND in-degree ≥ 1: no dangling
     * mass, every iteration's join is total, and the L1 join is exact.
     *
-    * Loop discipline (the family contract): one localCheckpointed pass per
-    * round that steps the ranks AND carries the |Δ| column, so the L1
-    * convergence scalar (an O(1)-result distributed aggregate, the LP
-    * moved-sum pattern) reads the checkpoint instead of re-running the
-    * step; the iteration-invariant edge list is checkpointed once. The
-    * per-round checkpoint is the unbounded-loop rule ([[kcoreConvergeState]],
-    * [[labelPropConvergeState]]) — the fixed-depth fuse-it-into-one-job
-    * optimization belongs to [[graphPagerankIter]], where the depth is
-    * known at authoring time.
+    * Loop discipline (the family contract, [[FusedFixpoint]]): each round
+    * steps the ranks AND carries the |Δ| column, so the L1 convergence
+    * scalar (an O(1)-result distributed aggregate, the LP moved-sum
+    * pattern) reads the block checkpoint instead of re-running the step;
+    * the iteration-invariant edge list is materialized once. The per-block
+    * checkpoint is the unbounded-loop rule — the fixed-depth
+    * fuse-it-into-one-job optimization belongs to [[graphPagerankIter]],
+    * where the depth is known at authoring time.
     *
     * Oracle: the recurrence unrolled to the guard depth with the same
     * L1-trajectory stop rule; guard exhaustion falls back to the
@@ -1212,92 +1127,34 @@ $trajectory),
     * the same recurrence; the unrolled oracle restates the recurrence, so
     * only an independent implementation can catch a shared-arithmetic
     * bug).
-    *
-    * PRECONDITION (r17 ADVICE): `edges0` must be SYMMETRIC — every node
-    * has indeg ≥ 1, so each round's inner join is total and the fused
-    * block's carried-d1 sum over s2 equals the sum over s1. An asymmetric
-    * frame would silently drop zero-indegree nodes' deltas from round 1's
-    * L1 with no failure signal; callers own the doubling (the
-    * [[sparseTradeEdges]] UNION ALL), exactly as on [[labelPropLoop]].
     */
   private[graft] def pagerankLoop(edges0: org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame, Long, Long) = {
     import org.apache.spark.sql.expressions.Window
-    val edges = edges0
-      .select(col("u").as("src"), col("v").as("dst"))
-      .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("src"))))
-      .localCheckpoint() // iteration-invariant side: computed once
-    var ranks = edges.select(col("src").as("node")).distinct()
-      .withColumn("rank_bp", lit(10000L))
-      .localCheckpoint()
-    val eps = 100L * ranks.count()
-    var l1 = Long.MaxValue
-    var rounds = 0L
-    // one recurrence step from a (node, rank_bp, ...) table: (node, new
-    // rank, |Δ|) — rank' = 1500 + (85·Σ(rank div outdeg)) div 100
-    def step(r: org.apache.spark.sql.DataFrame, rankOut: String,
-        deltaOut: String) =
-      edges.join(r, col("src") === col("node"))
-        .select(col("dst"), expr("rank_bp div outdeg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg((lit(1500L) + expr("(85L * sum(contrib)) div 100L")).as("rb"))
-        .join(r.select(col("node"), col("rank_bp").as("prev")),
-          col("dst") === col("node"))
-        .select(col("node"), col("rb").as(rankOut),
-          abs(col("rb") - col("prev")).as(deltaOut))
-    // r17: TWO rounds per materialization. The loop's cost at any SF is
-    // per-round fixed overhead (JobProfile: 272 scheduler/AQE jobs per
-    // invocation, ~35 ms each, on KB-sized frames), so halving the
-    // checkpoint + convergence-scalar actions halves the loop's wall.
-    // Round 2 consumes round 1 LAZILY inside one plan (depth stays
-    // bounded at 2 — the unbounded-loop rule is per-BLOCK now) and
-    // carries round 1's rank and |Δ| through its prev-join, so ONE
-    // aggregate reads both L1s and the early-exit round-1 table is
-    // recoverable from the same checkpoint; the round accounting below
-    // replays the original one-round loop exactly (GraphConvergenceSpec
-    // pins the trajectory against a driver-side reference).
-    while (l1 >= eps && rounds < PrConvergeGuard) {
-      if (rounds + 1 >= PrConvergeGuard) { // odd tail at the guard
-        val stepped = step(ranks, "rank_bp", "delta").localCheckpoint()
-        l1 = stepped.agg(coalesce(sum(col("delta")), lit(0L)))
-          .first().getLong(0)
-        rounds += 1
-        val prev = ranks
-        ranks = stepped.select(col("node"), col("rank_bp"))
-        org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(prev)
-      } else {
-        val s1 = step(ranks, "rank_bp", "d1") // lazy: fused into s2's plan
-        val s2 = step(s1, "r2", "d2")
-          .join(s1.select(col("node").as("n1"), col("rank_bp").as("r1"),
-            col("d1")), col("node") === col("n1"))
-          .select(col("node"), col("r1"), col("d1"), col("r2"), col("d2"))
-          .localCheckpoint()
-        // the graph is symmetric (indeg ≥ 1 everywhere), so every round's
-        // join is total and s2 covers the full node set — summing round
-        // 1's carried deltas over s2 equals summing them over s1
-        val row = s2.agg(coalesce(sum(col("d1")), lit(0L)),
-          coalesce(sum(col("d2")), lit(0L))).first()
-        val prev = ranks
-        rounds += 1
-        l1 = row.getLong(0)
-        if (l1 >= eps && rounds < PrConvergeGuard) { // round 2 counts
-          rounds += 1
-          l1 = row.getLong(1)
-          ranks = s2.select(col("node"), col("r2").as("rank_bp"))
-        } else { // converged (or guard) at round 1: its table, not round 2's
-          ranks = s2.select(col("node"), col("r1").as("rank_bp"))
-        }
-        // the superseded round's checkpoint is dead once `s2` is
-        // materialized (r13 ADVICE: up to guard-many pinned frames per
-        // invocation otherwise accumulate until JVM exit); the frame is
-        // invocation-local, so no concurrent reader can hold it
-        org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(prev)
+    FusedFixpoint.pinned(edges0.select(col("u"), col("v"))
+        .withColumn("outdeg", count(lit(1)).over(Window.partitionBy(col("u"))))
+    ) { edges =>
+      requireSymmetric(edges, "pagerankLoop")
+      val ranks = edges.select(col("u").as("node")).distinct()
+        .withColumn("rank_bp", lit(10000L))
+      val eps = 100L * ranks.count()
+      // one recurrence step: (node, rank' = 1500 + (85·Σ(rank div outdeg))
+      // div 100, |Δ|). Symmetry gives every node an in-edge, so both joins
+      // are total: no node (nor its |Δ|) drops out of the state or the L1
+      val (last, rounds, l1) = FusedFixpoint(ranks, PrConvergeGuard,
+          sum(col("delta")), _ < eps) { r =>
+        edges.join(r, col("u") === col("node"))
+          .select(col("v"), expr("rank_bp div outdeg").as("contrib"))
+          .groupBy(col("v"))
+          .agg((lit(1500L) + expr("(85L * sum(contrib)) div 100L")).as("rb"))
+          // the same projection of `r` as the first join reads (no alias),
+          // so both joins share one exchange of the state
+          .join(r.select(col("node"), col("rank_bp")), col("v") === col("node"))
+          .select(col("node"), col("rb").as("rank_bp"),
+            abs(col("rb") - col("rank_bp")).as("delta"))
       }
+      (last.select(col("node"), col("rank_bp")), rounds, l1)
     }
-    // the edges checkpoint is loop-local too (review pass: the final ranks
-    // derive only from the last stepped checkpoint) — free it on exit
-    org.apache.spark.sql.GraftSqlBridge.unpersistLocalCheckpoint(edges)
-    (ranks, rounds, l1)
   }
 
   val graphPagerankConverge = QueryDef(

@@ -107,9 +107,10 @@ object TextQueries2 {
     * and the fixpoint arrives in O(log diameter) rounds instead of
     * O(diameter). At corpus scale each round is a fixed number of shuffles
     * over O(V+E) rows, and round count — the serial bottleneck no cluster
-    * size can hide — is logarithmic. State truncated per round with
-    * localCheckpoint. This is the canonicalization step of corpus-scale
-    * dedup (pick one keeper per duplicate cluster, transitively).
+    * size can hide — is logarithmic. The loop is a [[FusedFixpoint]] (two
+    * rounds per checkpoint, guard 10). This is the canonicalization step of
+    * corpus-scale dedup (pick one keeper per duplicate cluster,
+    * transitively).
     *
     * The DuckDB oracle computes the same closure with a recursive CTE —
     * independent formulation, identical clusters.
@@ -123,52 +124,36 @@ object TextQueries2 {
       dir: String): org.apache.spark.sql.DataFrame = {
     val pairs = TextQueries.dedupJaccardTokens.fn(spark, dir)
       .select(col("a_id"), col("b_id"))
-    val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
+    FusedFixpoint.pinned(pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
       .unionAll(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("root", col("id"))
-      .localCheckpoint()
-    // one propagate-then-double round over an (id, root) table; `moved`
-    // reports the propagate half's movement
-    def step(l: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val neighborMin = edges
-        .join(l, col("src") === col("id"))
-        .groupBy(col("dst")).agg(min(col("root")).as("nb_root"))
-      val stepped = l
-        .join(neighborMin, col("id") === col("dst"), "left")
-        .select(col("id"),
-          least(col("root"), coalesce(col("nb_root"), col("root"))).as("root"),
-          (col("nb_root") < col("root")).cast("long").as("moved"))
-      // pointer doubling: follow one hop of the label table itself
-      val rootOf = stepped.select(col("id").as("r_id"), col("root").as("r_root"))
-      stepped
-        .join(rootOf, col("root") === col("r_id"), "left")
-        .select(col("id"),
-          least(col("root"), coalesce(col("r_root"), col("root"))).as("root"),
-          col("moved"))
+    ) { edges =>
+      // one propagate-then-double round over an (id, root) table; `moved`
+      // reports the propagate half's movement. It is 0 only at the
+      // fixpoint: then every edge joins equal roots, each component's root
+      // is its minimum id, whose own root is itself, so doubling moves
+      // nothing either
+      def step(l: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+        val neighborMin = edges
+          .join(l, col("src") === col("id"))
+          .groupBy(col("dst")).agg(min(col("root")).as("nb_root"))
+        val stepped = l
+          .join(neighborMin, col("id") === col("dst"), "left")
+          .select(col("id"),
+            least(col("root"), coalesce(col("nb_root"), col("root"))).as("root"),
+            (col("nb_root") < col("root")).cast("long").as("moved"))
+        // pointer doubling: follow one hop of the label table itself
+        val rootOf = stepped.select(col("id").as("r_id"), col("root").as("r_root"))
+        stepped
+          .join(rootOf, col("root") === col("r_id"), "left")
+          .select(col("id"),
+            least(col("root"), coalesce(col("r_root"), col("root"))).as("root"),
+            col("moved"))
+      }
+      val (labels, _, _) = FusedFixpoint(
+        edges.select(col("src").as("id")).distinct().withColumn("root", col("id")),
+        10, sum(col("moved")), _ == 0)(step)
+      labels.select(col("id"), col("root"))
     }
-    var changed = 1L
-    var rounds = 0
-    // r17: TWO rounds per materialization + convergence check — the loop's
-    // cost at bench scale is per-round fixed overhead (the pagerankLoop
-    // measurement), and unlike the converge queries the round count is NOT
-    // part of any output here, so no per-round carry is needed: rounds past
-    // the fixpoint are no-ops on the label table, and the SECOND step's
-    // moved-sum alone decides convergence (step₂ moved = 0 ⟺ its input was
-    // already the fixpoint). Guard unchanged at 10 total steps.
-    while (changed > 0 && rounds < 10) {
-      val materialized = step(step(labels).select(col("id"), col("root")))
-        .localCheckpoint()
-      // sum over ZERO rows is NULL (empty pair graph — possible under a
-      // regenerated or less-duplicated fixture); coalesce before getLong
-      // or the fixpoint check NPEs
-      changed = materialized.agg(coalesce(sum(col("moved")), lit(0L)))
-        .first().getLong(0)
-      labels = materialized.select(col("id"), col("root"))
-      rounds += 2
-    }
-    labels
   }
 
   val dedupComponents = QueryDef(

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.mutable
 
 /** Per-job decomposition of one registry query: wall time, task time, and
@@ -14,13 +13,7 @@ object JobProfile {
     val sfDir = args(0)
     val names = args.drop(1)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.create(cpus)
     spark.range(1000).selectExpr("sum(id)").collect()
 
     final case class Job(id: Int, var desc: String, var t0: Long = 0L,
@@ -94,7 +87,8 @@ object JobProfile {
       val wall = (System.nanoTime() - t0) / 1e9
       if (sys.env.contains("GRAFT_PLAN_METRICS"))
         dumpMetrics(df.queryExecution.executedPlan, 0)
-      Thread.sleep(500) // let the listener bus drain the tail of task events
+      // the listener bus is asynchronous: drain the tail of task events
+      org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)
       spark.sparkContext.removeSparkListener(listener)
       println(f"[jobprofile] $name wall=$wall%.3f jobs=${jobs.size}")
       jobs.values.foreach { j =>

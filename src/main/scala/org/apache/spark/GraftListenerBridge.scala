@@ -1,7 +1,7 @@
 package org.apache.spark
 
 /** private[spark] access shim (same pattern as GraftSqlBridge): lets the
-  * shuffle auditor drain queued listener events before reading its counters.
+  * profiling tools drain queued listener events before reading counters.
   */
 object GraftListenerBridge {
   def drainListenerBus(sc: SparkContext): Unit =

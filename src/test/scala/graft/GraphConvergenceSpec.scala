@@ -80,6 +80,21 @@ class GraphConvergenceSpec extends AnyFunSuite {
     assert(rounds === 2L, s"expected 2 rounds, got $rounds")
   }
 
+  test("kcore peel counts a keep node stranded by its neighbours' peel") {
+    import spark.implicits._
+    // triangle {1,2,3} plus the path 5-4-6. Round 1 peels the leaves 5 and
+    // 6; node 4 had degree 2, so it is in keep_1 but has no edge left.
+    // Round 2 drops it from the keep set without dropping an edge, and only
+    // round 3 repeats the keep count: the oracle's |keep_i| == |keep_(i-1)|
+    // rule says 3 rounds, not 2
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (4L, 5L), (4L, 6L))
+    val edges = (und ++ und.map(_.swap)).toDF("u", "v")
+    val (e, keep, rounds) = graft.ops.RelationalQueries2.kcorePeelLoop(edges)
+    assert(keep.collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
+    assert(e.count() === 6L, "expected the triangle's 6 directed edges")
+    assert(rounds === 3L, s"expected 3 rounds, got $rounds")
+  }
+
   test("pagerank fused loop: odd-round convergence takes the round-1 early exit") {
     import spark.implicits._
     // a triangle is 2-regular, so the recurrence is a fixpoint at round 1:
@@ -147,5 +162,38 @@ class GraphConvergenceSpec extends AnyFunSuite {
     assert(rounds === refRounds, s"rounds $rounds != reference $refRounds")
     assert(l1 === refL1 && l1 < 100L * n,
       s"final L1 $l1 (reference $refL1) not under the 100*n=${100 * n} stop")
+  }
+
+  test("the graph loops reject a one-directional edge frame") {
+    import spark.implicits._
+    val oneWay = Seq((1L, 2L), (2L, 3L), (1L, 3L)).toDF("u", "v")
+    val loops = Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+      "kcorePeelLoop" -> (graft.ops.RelationalQueries2.kcorePeelLoop(_)),
+      "labelPropLoop" -> (graft.ops.RelationalQueries2.labelPropLoop(_)),
+      "pagerankLoop" -> (graft.ops.RelationalQueries2.pagerankLoop(_)))
+    for ((name, loop) <- loops) {
+      val e = intercept[IllegalArgumentException](loop(oneWay))
+      assert(e.getMessage.contains(name), s"rejection should name $name: ${e.getMessage}")
+    }
+  }
+
+  test("labelprop loop evicts every checkpoint but the one behind its labels") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    // RDDs created on this thread carry this call site, so the check sees
+    // only the loop's own checkpoints, not those of suites running beside it
+    val site = s"labelprop-eviction-${java.util.UUID.randomUUID()}"
+    val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L))
+    val edges = (und ++ und.map(_.swap)).toDF("u", "v")
+    sc.setCallSite(site)
+    val (labels, _, rounds) =
+      try graft.ops.RelationalQueries2.labelPropLoop(edges)
+      finally sc.clearCallSite()
+    assert(rounds === 5L, s"path 1-..-5 should converge in 5 rounds, got $rounds")
+    val kept = org.apache.spark.sql.GraftSqlBridge.localCheckpointRddId(labels).toSet
+    val pinned = sc.getPersistentRDDs
+      .filter { case (_, r) => org.apache.spark.RddSiteProbe.creationSite(r) == site }.keySet
+    assert(kept.nonEmpty && pinned === kept,
+      s"loop left checkpoints pinned: rdd ids ${pinned -- kept} (labels read $kept)")
   }
 }

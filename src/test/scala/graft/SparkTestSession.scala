@@ -2,19 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for every suite (JVM-wide, lazy). */
+/** One shared local session for every suite (JVM-wide, lazy), built by the
+  * CLI mains' own recipe. */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = LocalSession.create("4")
 
   /** Create a test temp dir that is deleted when the test JVM exits —
     * the default for spec scratch space. Every full `sbt test` run used
