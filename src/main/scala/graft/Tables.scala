@@ -1,17 +1,68 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Shared helpers for the query registry. */
 object Tables {
 
-  /** Load one driver test table (TESTDATA.md) from an sf dir.
+  /** Load one driver test table (TESTDATA.md) from an sf dir, through
+    * [[readParquet]] (schema read on the driver, no Spark job). `events`
+    * reads with `spark.sql.legacy.parquet.nanosAsLong` on and then goes
+    * through [[adaptEventsTs]].
+    */
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    if (name == "events") {
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      adaptEventsTs(readParquet(spark, path))
+    } else readParquet(spark, path)
+  }
+
+  /** Read a parquet path, resolving a single file's schema on the driver.
     *
-    * `events.ts` has shipped as several physical parquet types across
-    * testdata generations, so the load adapts to whatever the file says
-    * rather than hardcoding one era's schema:
+    * `spark.read.parquet(path)` with no schema infers it through
+    * `ParquetUtils.inferSchema` → `mergeSchemasInParallel`: one whole
+    * Spark job (tens of ms of driver scheduling) to read one footer, paid
+    * on every table reference. For a FILE this makes the inference task's
+    * own two calls here instead — `ParquetFooterReader.readFooter(...,
+    * SKIP_ROW_GROUPS)` then `ParquetFileFormat.readSchemaFromFooter` with
+    * a converter built from the session conf, so `nanosAsLong`,
+    * binary-as-string and the NTZ inference flags are honoured exactly as
+    * Spark honours them — and hands the result to `spark.read.schema`. The
+    * footer is re-read on every call, so a rewritten file is never read
+    * with a stale schema.
+    *
+    * A DIRECTORY (summary files, multi-file schema merge, partition
+    * discovery) keeps Spark's own inference; the choice is made from the
+    * path's file status. A missing path throws `FileNotFoundException`.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val status = p.getFileSystem(conf).getFileStatus(p)
+    if (status.isDirectory) spark.read.parquet(path)
+    else {
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(status, conf), SKIP_ROW_GROUPS)
+      spark.read.schema(ParquetFileFormat.readSchemaFromFooter(
+          new Footer(status.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+        .parquet(path)
+    }
+  }
+
+  /** Surface `events.ts` as a session-tz TIMESTAMP, batch or stream alike
+    * (`raw` is read with `nanosAsLong` on). `events.ts` has shipped as
+    * several physical parquet types across testdata generations, so this
+    * adapts to whatever the file says rather than hardcoding one era's
+    * schema:
     *
     *  - TIMESTAMP(NANOS), which Spark 4 refuses ([PARQUET_TYPE_ILLEGAL])
     *    unless read as raw ns longs (legacy mode): rebuild the µs timestamp
@@ -24,16 +75,12 @@ object Tables {
     *    the same column as plain µs TIMESTAMP natively.
     *  - TIMESTAMP(MICROS, utc-adjusted) → already TimestampType, pass through.
     */
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$sfDir/$name.parquet")
-      raw.schema("ts").dataType match {
-        case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-        case _                => raw
-      }
-    } else spark.read.parquet(s"$sfDir/$name.parquet")
+  private[graft] def adaptEventsTs(raw: DataFrame): DataFrame =
+    raw.schema("ts").dataType match {
+      case LongType         => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
+      case _                => raw
+    }
 
   /** Repartition to the shuffle-partition count ONLY when the plan's
     * current parallelism is materially below it. The driver fixtures are

@@ -11,10 +11,10 @@ import org.apache.spark.sql.expressions.Aggregator
   * upper-triangle products per VECTOR keeps the aggregate input at one
   * array row per vector instead of 2 080 exploded rows per vector
   * (4.16 M rows at sf0.1) — measured 2.2× faster on the same plan, 5×
-  * combined with parallelizing the single-file scan (GramAB A/B, r8;
-  * EQUAL on every cell). Each task folds its rows into one 2 080-long
-  * buffer, so the shuffle is `numPartitions × d(d+1)/2` longs regardless
-  * of corpus size — the same map-side-combine bound the explode shape had,
+  * combined with parallelizing the single-file scan (r8 A/B, EQUAL on
+  * every cell; BASELINE.md "Vector-query optimization"). Each task folds
+  * its rows into one 2 080-long buffer, so the shuffle is
+  * `numPartitions × d(d+1)/2` longs regardless of corpus size — the same map-side-combine bound the explode shape had,
   * with far less per-row aggregate bookkeeping.
   *
   * Exactness: pure Long addition, associative and commutative, so

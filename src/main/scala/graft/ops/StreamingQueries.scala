@@ -26,10 +26,6 @@ import graft.streaming.EventStreams
   */
 object StreamingQueries {
 
-  /** Streaming read of the events table. Same schema-adaptive `ts` handling
-    * as [[graft.Tables.load]] (ns-long rebuild / NTZ cast / passthrough; one
-    * batch schema sniff — the stream itself reads via the file source).
-    */
   /** Expose a single-file fixture table as a DIRECTORY for the file-stream
     * source (which requires a basePath): a per-source-path symlink dir
     * (copy fallback if links unsupported). Keyed by SHA-256 of the full
@@ -68,19 +64,18 @@ object StreamingQueries {
     linkDir
   }
 
+  /** Streaming read of the events table: the schema is read on the driver
+    * ([[graft.Tables.readParquet]]), the stream itself reads via the file
+    * source, and `ts` goes through the same [[graft.Tables.adaptEventsTs]]
+    * as the batch [[graft.Tables.load]].
+    */
   private[graft] def streamEvents(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val linkDir = linkedSingleFileDir(dir, "events")
-    val schema = spark.read
-      .parquet(java.nio.file.Paths.get(dir, "events.parquet").toString).schema
-    val raw = spark.readStream.schema(schema).parquet(linkDir.toString)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
+    val schema = graft.Tables.readParquet(spark,
+      java.nio.file.Paths.get(dir, "events.parquet").toString).schema
+    graft.Tables.adaptEventsTs(
+      spark.readStream.schema(schema).parquet(linkDir.toString))
   }
 
   /** Per-sink micro-batch execution seconds from the last [[runToTable]]
@@ -981,8 +976,8 @@ object StreamingQueries {
     * adaptive branches like [[streamEvents]]'s ts handling needed). */
   private[graft] def streamDocuments(spark: SparkSession, dir: String): DataFrame = {
     val linkDir = linkedSingleFileDir(dir, "documents")
-    val schema = spark.read
-      .parquet(java.nio.file.Paths.get(dir, "documents.parquet").toString).schema
+    val schema = graft.Tables.readParquet(spark,
+      java.nio.file.Paths.get(dir, "documents.parquet").toString).schema
     spark.readStream.schema(schema).parquet(linkDir.toString)
   }
 
@@ -1994,6 +1989,9 @@ object StreamingQueries {
               eventBid.fold(lit(batchId))(f => f(batchId)))
             pendingStoreWrite.set(storeWritePool.submit(new Runnable {
               override def run(): Unit = {
+                // time the writes, not the hand-off gap since the batch
+                // thread's last mark
+                tMark = System.nanoTime()
                 // the pool thread inherited the STREAMING query's job group
                 // (thread-locals copy at thread creation): detach, or the
                 // engine's stop() after the final batch cancels the

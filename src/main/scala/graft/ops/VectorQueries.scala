@@ -998,10 +998,11 @@ object VectorQueries {
     * [[vectorCovariance]] (which pins it against the oracle) and
     * [[vectorPowerIteration]] (which iterates on it).
     *
-    * Shape settled BY MEASUREMENT (r8, `tools/GramAB` A/B, cell-exact on
-    * both corpora): per-vector product ARRAYS folded by a typed Long-sum
-    * Aggregator beat the previous explode+groupBy (2 080 (i,j,p) rows per
-    * vector through a hash aggregate) 2.2× — and the input repartition
+    * Shape settled BY MEASUREMENT (r8 A/B, cell-exact on both corpora;
+    * BASELINE.md "Vector-query optimization"): per-vector product ARRAYS
+    * folded by a typed Long-sum Aggregator beat the previous
+    * explode+groupBy (2 080 (i,j,p) rows per vector through a hash
+    * aggregate) 2.2× — and the input repartition
     * buys another 2.4× because the driver fixture is ONE parquet file, so
     * without it the whole pair-product explode ran in a single task
     * (2.25 s → 0.44 s combined at sf0.1; same win at 10×). The shuffle is

@@ -171,6 +171,93 @@ class TestdataSchemaSpec extends AnyFunSuite {
     }
   }
 
+  // ---------------------------------------------------------------------
+  // Driver-side schema resolution (Tables.readParquet): a single file's
+  // schema comes from its footer on the driver, with no Spark job; a
+  // directory keeps Spark's own inference.
+  // ---------------------------------------------------------------------
+
+  private val nanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  private def withNanosAsLong[T](on: Boolean)(body: => T): T = {
+    val prev = spark.conf.getOption(nanosAsLong)
+    spark.conf.set(nanosAsLong, on.toString)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(nanosAsLong, v)
+      case None    => spark.conf.unset(nanosAsLong)
+    }
+  }
+
+  for (on <- Seq(true, false)) {
+    test(s"driver-read schema equals Spark's inferred schema (nanosAsLong=$on)") {
+      import scala.util.Try
+      val paths = TestdataContract.expected.keys.toSeq.sorted
+        .map(t => s"$t" -> s"$sfDir/$t.parquet") ++
+        eraDirs.toSeq.sorted.map { case (era, d) => era -> s"$d/events.parquet" }
+      withNanosAsLong(on) {
+        for ((label, path) <- paths) {
+          val inferred = Try(spark.read.parquet(path).schema)
+          val driver = Try(Tables.readParquet(spark, path).schema)
+          // the ns era is unreadable with nanosAsLong off: both sides refuse it
+          assert(inferred.isSuccess == driver.isSuccess,
+            s"$label: Spark inference $inferred, driver read $driver")
+          inferred.foreach(s => assert(driver.get == s,
+            s"$label: driver read ${driver.get.treeString}, Spark inferred ${s.treeString}"))
+        }
+        // the flag must actually reach the driver-side converter
+        assert(Try(Tables.readParquet(spark,
+          s"${eraDirs("ns-long")}/events.parquet")).isSuccess == on)
+      }
+    }
+  }
+
+  test("Tables.load of all 10 tables starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"tables-load-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "Tables.load job count")
+    try {
+      TestdataContract.expected.keys.toSeq.sorted
+        .foreach(t => Tables.load(spark, sfDir, t).schema)
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran to load 10 tables")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a multi-file directory keeps Spark's schema inference") {
+    import org.apache.spark.sql.functions._
+    val dir = SparkTestSession.tempDir("graft-multifile") + "/t"
+    spark.range(0, 40, 1, 4)
+      .select(col("id"), (col("id") % 3).as("k"), col("id").cast("string").as("s"))
+      .write.partitionBy("k").parquet(dir)
+    val got = Tables.readParquet(spark, dir)
+    // partition discovery survives: `k` is a directory name, in no footer
+    assert(got.schema == spark.read.parquet(dir).schema)
+    assert(got.schema.fieldNames.toSeq == Seq("id", "s", "k"))
+    assert(got.count() == 40)
+  }
+
+  test("a missing table fails loudly and reports as unreadable drift") {
+    val empty = SparkTestSession.tempDir("graft-missing")
+    val e = intercept[Exception](Tables.load(spark, empty, "orders"))
+    assert(e.getMessage.contains(s"$empty/orders.parquet"), e.getMessage)
+    val drift = TestdataContract.drift(spark, empty)
+    assert(drift.size == TestdataContract.expected.size, drift.mkString("\n"))
+    TestdataContract.expected.keys.foreach(t =>
+      assert(drift.exists(_.startsWith(s"$t: unreadable (")), drift.mkString("\n")))
+  }
+
   test("events.ts values survive the load adaptation (sanity bounds)") {
     import org.apache.spark.sql.functions._
     val row = Tables.load(spark, sfDir, "events")
