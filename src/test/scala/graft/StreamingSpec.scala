@@ -1044,6 +1044,31 @@ class StreamingSpec extends AnyFunSuite {
       } finally q.stop()
     }
   }
+
+  test("a repeated streaming query reuses its generated classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import spark.implicits._
+    // every start streams on a clone of the session with a new UUID; with
+    // session artifact isolation on, each clone got its own executor class
+    // loader and recompiled all of its codegen (see LocalSession)
+    def run(): Set[(Timestamp, String, Long)] = {
+      val q = EventStreams.tumblingCounts(graft.ops.StreamingQueries
+          .streamEvents(spark, "/root/testdata/sf0.001")
+          .select($"ts", $"event_type", $"value"), watermark = "1 hour", win = "1 day")
+        .writeStream.format("memory").queryName("codegen_reuse_out")
+        .outputMode(OutputMode.Append).start()
+      try q.processAllAvailable() finally q.stop()
+      spark.table("codegen_reuse_out")
+        .select($"window_start", $"event_type", $"n").as[(Timestamp, String, Long)]
+        .collect().toSet
+    }
+    val first = run()
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = run()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    assert(second === first)
+    assert(compiles == 0, s"the second run compiled $compiles generated classes")
+  }
 }
 
 /** Spec fixture pinning the LISTSTATE primitive — the one state type the
