@@ -5,6 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType,
+  LongType, StringType, StructField, StructType}
 
 import graft.QueryDef
 import graft.Tables.cents
@@ -1102,14 +1104,15 @@ object StreamingQueries {
     stageDocSlices(docs, n, col("doc_id") % n)
 
   /** MEMOIZED mod-slice staging, keyed by (sfDir, n) — r14 verdict ask #6:
-    * `stream_neardup_ttl` and `stream_neardup_late` (and every K arm of
-    * `tools.TtlCurve`) replay the SAME corpus at the SAME slicing — only
-    * the bid rule inside the engine differs — so each extra consumer paid
-    * a redundant staging job (+ 6 file commits) per bench run. The staged
-    * dir is read-only for consumers (each run brings its own checkpoint,
-    * store, and spool); mtime order, the only load-bearing property, is
-    * fixed at write time. Shared dirs are EXCLUDED from per-run cleanup
-    * (a memo is not a leak) and reclaimed by one JVM shutdown hook.
+    * `stream_neardup_ttl` and `stream_neardup_late` replay the SAME
+    * corpus at the SAME slicing — only the bid rule inside the engine
+    * differs — so each extra consumer paid a redundant staging job (+ 6
+    * file commits) per bench run. The staged dir is read-only for
+    * consumers (each run brings its own checkpoint, store, and spool);
+    * mtime order, the only load-bearing property, is fixed at write time.
+    * Shared dirs are EXCLUDED from per-run cleanup (a memo is not a leak;
+    * StreamingSpec "shared slice memo") and reclaimed by one JVM shutdown
+    * hook.
     */
   private val sharedSliceMemo =
     new java.util.concurrent.ConcurrentHashMap[(String, Int), (String, String)]()
@@ -1288,25 +1291,37 @@ object StreamingQueries {
   private def inBuckets(c: Column, vs: Seq[Int]): Column =
     if (vs.isEmpty) lit(false) else c.isin(vs.map(Integer.valueOf): _*)
 
+  /** Append a batch to a store table hive-partitioned by `keys`, with the
+    * batch id `bid` as the OUTERMOST partition under retention so expiry
+    * is one dir drop. bid is a COLUMN: lit(batchId) for arrival-time
+    * retention, or a per-row event bucket under event-time retention
+    * (late rows land in an already-expired dir and are reclaimed by the
+    * next drop pass). A keyed table is hash-repartitioned on its keys
+    * into exactly `partitions` tasks (REPARTITION_BY_NUM: no write plan
+    * depends on the session conf at write time, and AQE cannot coalesce
+    * it), which aligns write tasks with partition dirs: ≤1 file per
+    * touched dir per batch instead of tasks×dirs. The store engines pass
+    * their run's captured batch parallelism ([[PipelinedStore]]).
+    */
+  private def appendStore(df: DataFrame, dir: String,
+      bid: Option[Column], keys: Seq[String] = Nil,
+      partitions: Int = 0): Unit = {
+    val stamped = bid.fold(df)(b => df.withColumn("bid", b))
+    val parted = if (keys.isEmpty) stamped
+      else stamped.repartition(partitions, keys.map(col): _*)
+    val parts = bid.map(_ => "bid").toSeq ++ keys
+    val w = parted.write.mode("append")
+    (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(dir)
+  }
+
   /** Append a batch's exploded band keys (doc_id, lang, w, band, bh, pb)
     * to the band store, hive-partitioned by (w, pb) so later batches'
-    * candidate joins partition-prune to their matched buckets. The
-    * repartition aligns write tasks with partition dirs (≤1 file per
-    * touched dir per batch instead of tasks×dirs).
+    * candidate joins partition-prune to their matched buckets. Direct
+    * (non-engine) callers write with one task per bucket.
     */
   private[graft] def writeStoreBands(batchBands: DataFrame, dir: String,
-      bid: Option[Column] = None): Unit = bid match {
-    case None => batchBands.repartition(col("w"), col("pb"))
-      .write.mode("append").partitionBy("w", "pb").parquet(dir)
-    case Some(b) =>
-      // retention layout: batch id OUTERMOST so expiry is one dir drop.
-      // bid is a COLUMN: lit(batchId) for arrival-time retention, or a
-      // per-row event bucket under event-time retention (late rows land in
-      // an already-expired dir and are reclaimed by the next drop pass)
-      batchBands.withColumn("bid", b)
-        .repartition(col("w"), col("pb"))
-        .write.mode("append").partitionBy("bid", "w", "pb").parquet(dir)
-  }
+      bid: Option[Column] = None, partitions: Int = StoreBuckets): Unit =
+    appendStore(batchBands, dir, bid, Seq("w", "pb"), partitions)
 
   /** Append a batch's signatures (one file per batch). The sig table stays
     * UNBUCKETED by choice: the verify a-side scan is column-pruned
@@ -1318,13 +1333,8 @@ object StreamingQueries {
     * the unbounded layout; retention layouts are bounded by expiry.
     */
   private[graft] def writeStoreSigs(sigs: DataFrame, dir: String,
-      bid: Option[Column] = None): Unit = bid match {
-    case None => sigs.select(col("doc_id"), col("lang"), col("sig"))
-      .write.mode("append").parquet(dir)
-    case Some(b) => sigs.select(col("doc_id"), col("lang"), col("sig"))
-      .withColumn("bid", b)
-      .write.mode("append").partitionBy("bid").parquet(dir)
-  }
+      bid: Option[Column] = None): Unit =
+    appendStore(sigs.select(col("doc_id"), col("lang"), col("sig")), dir, bid)
 
   /** True iff the tree under `f` holds at least one parquet data file —
     * the store-read emptiness probe. listFiles-nonEmpty is NOT enough: a
@@ -1666,17 +1676,120 @@ object StreamingQueries {
     sys.props.get("graft.maxBatchBroadcastBytes").map(_.toLong)
       .getOrElse(256L << 20)
 
+  /** Candidate pairs of one store engine's batch, the one join-regime rule
+    * both dedup engines use: store-side pairs (`store`, every earlier
+    * arrival) pair UNCONDITIONALLY, same-batch pairs by id order (the
+    * candidate rule at [[neardupStoreRun]]). Both inputs carry the band
+    * `keys` and an `id`; the result is (a_id, b_id), with duplicate band
+    * collisions kept (they just re-verify). The batch side is the build:
+    * an explicit broadcast, or with `shuffled` a SHUFFLE_HASH build, which
+    * the caller picks when the batch side is too big to broadcast per
+    * batch (a driver-serialized build growing with the trigger, a hazard
+    * no store bound caps). Then the store side exchanges NARROW band keys
+    * and nothing is sorted. Under the session's broadcast threshold the
+    * broadcast measured fastest at sf0.1 (hinting SHUFFLE_HASH there
+    * regressed ttl 19.3 → 22.8 s; both regimes' records: BASELINE.md).
+    */
+  private def candidatePairs(store: DataFrame, batch: DataFrame,
+      keys: Seq[String], shuffled: Boolean): DataFrame = {
+    val b0 = batch.withColumnRenamed("id", "b_id")
+    val b = if (shuffled) b0.hint("SHUFFLE_HASH") else broadcast(b0)
+    def pairs(a: DataFrame) = a.withColumnRenamed("id", "a_id").join(b, keys)
+    pairs(store).unionByName(pairs(batch).filter(col("a_id") < col("b_id")))
+      .select(col("a_id"), col("b_id"))
+  }
+
+  /** The verify join of both dedup engines: attaches the a-side (store ∪
+    * batch rows keyed `a_id`) and the b-side (batch rows keyed `b_id`) to
+    * the narrow candidate pairs, in one of three regimes. NO pair distinct
+    * before it: a near-dup pair collides in up to 16 bands, and a
+    * distinct-then-verify shape exchanged and aggregated that whole
+    * multiplicity-inflated volume per batch (34-170 M rows folding to
+    * 7-33 M pairs per 100× batch); duplicate collisions just re-verify.
+    *  - `bigCorpus` false (the a-side table auto-broadcasts): unhinted —
+    *    the candidate stream never shuffles. Forcing SHUFFLE_HASH here
+    *    regressed the text engine's sf0.1 ttl 19.3 → 22.8 s.
+    *  - big corpus, batch fits [[maxBatchBroadcastBytes]] (every
+    *    production-sized trigger): the a-side is the SHUFFLE_HASH build
+    *    probed by the narrow pair stream, the b-side rides a broadcast,
+    *    and the verify filters in the same stage. Unhinted, both attaches
+    *    resolve to SortMergeJoin and SORT the candidate volume carrying
+    *    520 B arrays, twice (37-60 s of every 100× batch).
+    *  - big corpus, oversized batch: the LINEAR fallback — attach the
+    *    b-side by SHUFFLE_HASH first while the pairs are narrow, then the
+    *    a-side: one exchange of candidate volume carrying one array,
+    *    spillable where the broadcast build would be an OOM.
+    * `batchRows` (× ~560 B/row) is evaluated only in the big regime.
+    */
+  private def verifyJoin(cand: DataFrame, a: DataFrame, b: DataFrame,
+      bigCorpus: Boolean, batchRows: => Long): DataFrame =
+    if (!bigCorpus) cand.join(a, Seq("a_id")).join(b, Seq("b_id"))
+    else if (batchRows * 560L <= maxBatchBroadcastBytes)
+      cand.join(a.hint("SHUFFLE_HASH"), Seq("a_id"))
+        .join(broadcast(b), Seq("b_id"))
+    else cand.join(b.hint("SHUFFLE_HASH"), Seq("b_id"))
+      .join(a.hint("SHUFFLE_HASH"), Seq("a_id"))
+
+  /** One streaming store engine run: replays `incoming` (one slice file per
+    * micro-batch, oldest first, the bid mapping every arrival-rule oracle
+    * relies on) through `body(batch, batchId, store, outDir)`, which reads
+    * and appends the run's [[PipelinedStore]] and appends its output rows
+    * to `outDir`. Returns the output (empty with `outSchema` when no batch
+    * wrote a row) pinned in block-manager memory, after the last store
+    * write is durable (or has failed the run), with every per-run dir
+    * deleted, failed runs included: the store, the output spool, the
+    * checkpoint (all `graft-<tag>-*`) and `incoming` — unless it is a
+    * shared slice memo ([[sharedSliceDirs]]). Callers apply their own
+    * ORDER BY. Each body runs at the batch parallelism captured here, with
+    * AQE on: runSink holds the stream-state sizing (4 partitions) for the
+    * query and the micro-batch thread's conf clone has AQE forced off —
+    * right for stateful operators, but these bodies are pure batch plans
+    * (the neardup verify join over 2.4 M candidate pairs at sf0.1 was
+    * 4-5 s/batch on 4 partitions).
+    */
+  private[graft] def storeStreamRun(spark: SparkSession, name: String,
+      tag: String, schema: StructType, incoming: String,
+      outSchema: StructType)(
+      body: (DataFrame, Long, PipelinedStore, String) => Unit): DataFrame = {
+    val storeDir = Files.createTempDirectory(s"graft-$tag-store").toString
+    val outDir = Files.createTempDirectory(s"graft-$tag-out").toString
+    val ckpt = Files.createTempDirectory(s"graft-$tag-ck").toString
+    val store = new PipelinedStore(name, storeDir,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val batchConf = Seq("spark.sql.shuffle.partitions" ->
+      store.partitions.toString, "spark.sql.adaptive.enabled" -> "true")
+    try {
+      val out = runSink(spark, name) {
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+          .parquet(incoming).writeStream
+          .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            store.begin(batchId)
+            val sp = batch.sparkSession
+            val streamConf = batchConf.map { case (k, _) => k -> sp.conf.get(k) }
+            try {
+              batchConf.foreach { case (k, v) => sp.conf.set(k, v) }
+              body(batch, batchId, store, outDir)
+            } finally streamConf.foreach { case (k, v) => sp.conf.set(k, v) }
+          }
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+      } { readOrEmpty(spark, outDir, outSchema)(identity) }
+      store.await()
+      out.localCheckpoint()
+    } finally {
+      store.close()
+      Seq(incoming, storeDir, outDir, ckpt)
+        .filterNot(sharedSliceDirs.contains)
+        .foreach(graft.Tables.deleteTree)
+    }
+  }
+
   private[graft] def neardupStoreRun(spark: SparkSession, name: String,
       docs: DataFrame, incoming: String,
       retainBatches: Option[Int] = None,
       eventBid: Option[Long => Column] = None,
       onBatch: Option[BatchStats => Unit] = None): DataFrame = {
-    val storeDir = Files.createTempDirectory("graft-ndv-store").toString
-    val bandsDir = s"$storeDir/bands"
-    val sigsDir = s"$storeDir/sigs"
-    val heldDir = Files.createTempDirectory("graft-ndv-held").toString
-    val ckpt = Files.createTempDirectory("graft-ndv-ck").toString
-    // the store is TWO tables, each written once per batch:
+    // the store is TWO tables, each appended once per batch:
     //   bands: exploded (doc_id, lang, band, bh) hive-partitioned by
     //          (w, pb = hash(band,bh) % StoreBuckets) — the candidate join
     //          reads only the buckets this batch's own band keys touch;
@@ -1703,374 +1816,171 @@ object StreamingQueries {
       df.select(col("doc_id"), col("lang"), explode(col("bands")).as("bb"))
         .select(col("doc_id"), col("lang"), col("bb.w").as("w"),
           col("bb.band").as("band"), col("bb.bh").as("bh"))
-    // the batch-engine parallelism, captured OUTSIDE runSink: runSink
-    // drops shuffle partitions to the stream-state sizing (4), which is
-    // right for stateful operators but starves this query's foreachBatch
-    // verify join — 2.4M candidate pairs at sf0.1 on 4 partitions was
-    // 4-5 s/batch; restoring the batch sizing inside the (stateless)
-    // batch body brings it back to batch-LSH economics
-    val batchPartitions = spark.conf.get("spark.sql.shuffle.partitions")
-    // Verify-join strategy is CORPUS-conditional (r15 attribution, both
-    // directions measured): below the broadcast threshold the whole sig
-    // table auto-broadcasts and the candidate stream never shuffles —
-    // forcing SHUFFLE_HASH there REGRESSED sf0.1 ttl 19.3 → 22.8 s; above
-    // it, the unhinted plan degrades to SortMergeJoin and SORTS the
-    // candidate volume carrying 520 B sig arrays (~40 s/batch of the 100×
-    // wall). One metadata-only count at stream start picks the regime:
-    // rows × ~560 B (id + lang + 64-long array + row overhead) vs the
-    // SESSION's broadcast threshold, not a 10 MB literal (r15 ADVICE): a
-    // session that disables auto-broadcast (-1, several specs) must land
-    // in the hinted regime, or both verify joins fall back to unhinted
-    // SortMergeJoin — the regression mode the probe exists to prevent.
+    // Join regimes are CORPUS-conditional (see verifyJoin): one
+    // metadata-only count at stream start, rows × ~560 B (id + lang +
+    // 64-long array + row overhead) vs the SESSION's broadcast threshold,
+    // not a 10 MB literal (r15 ADVICE): a session that disables
+    // auto-broadcast (-1, several specs) must land in the hinted regime.
+    // The candidate joins ride the same probe (their batch side is
+    // batch-rows × 16 band keys, ~1.3 M rows per 100× batch).
     val bcBytes = sessionBroadcastThreshold(spark)
     val bigCorpus = bcBytes <= 0 || docs.count() * 560L > bcBytes
-    // r18 (guide §2.6, overlap independent jobs): the two store APPENDS are
-    // ~0.7 s/batch of commit-bound work (GRAFT_STORE_TIMING: bwrite ≈ 0.6 s,
-    // swrite ≈ 0.13 s steady at sf0.1) that nothing in the SAME batch reads
-    // — the held output is already written, and the next batch only touches
-    // the store at its compaction probe / candidate joins, AFTER ~0.7 s of
-    // row-local sig+bands work. Pipeline them: the writes (and the expiry
-    // drop + endurance snapshot that must follow them) run on a one-thread
-    // pool while the stream starts the next trigger; the next batch AWAITS
-    // the handoff before its first store access, so every read still sees
-    // exactly the prior batches' appends — the arrival-rule semantics are
-    // byte-identical, only the idle gap between batches absorbs the commit.
-    // A failed write surfaces at the next await (or the post-stream one
-    // below), failing the run loudly. The writes plan under whatever conf
-    // the session holds when the pool gets to them (batch sizing if the
-    // future starts instantly, restored stream sizing otherwise): either
-    // way repartition(w, pb) keeps ≤1 file per touched dir and the work is
-    // commit-bound, so the layout contract is conf-independent.
-    val storeWritePool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val pendingStoreWrite =
-      new java.util.concurrent.atomic.AtomicReference[
-        java.util.concurrent.Future[_]](null)
-    def awaitStoreWrites(): Unit = {
-      val f = pendingStoreWrite.getAndSet(null)
-      if (f != null) f.get() // rethrows a failed write as ExecutionException
-    }
-    try {
-      val held = runSink(spark, name) {
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", "1").parquet(incoming)
-        stream.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val sp = batch.sparkSession
-            val tBatch0 = System.nanoTime()
-            // retention window floor: batch b may only see bids >= b - k
-            // (bid == slice index: maxFilesPerTrigger=1 over mtime-ordered
-            // slices — the same mapping the arrival-rule oracles rely on).
-            // Under EVENT-TIME retention (eventBid set) the floor is the
-            // same expression — the arrival frontier IS the watermark here
-            // (every batch carries on-time rows whose event bucket equals
-            // the batch id) — but stored rows sit at their EVENT bucket,
-            // so a late row's witness window is short or already over.
-            val minBid = retainBatches.map(k => batchId - k)
-            val streamPartitions = sp.conf.get("spark.sql.shuffle.partitions")
-            val streamAqe = sp.conf.get("spark.sql.adaptive.enabled")
-            sp.conf.set("spark.sql.shuffle.partitions", batchPartitions)
-            // the micro-batch thread hands foreachBatch a session whose
-            // conf clone has AQE forced off (stateful-stream rule); these
-            // body plans are pure batch (checkpointed sigs + parquet
-            // store), so claw back the adaptive engine for them
-            sp.conf.set("spark.sql.adaptive.enabled", "true")
-            try {
-            // the previous batch's pipelined store writes must be durable
-            // before ANYTHING here lists or reads the store (the compaction
-            // probes walk it, the candidate joins scan it)
-            awaitStoreWrites()
-            // small-files maintenance FIRST (see compactStoreBands): a
-            // batch-start trigger means the rewrite is always read back by
-            // this batch's candidate joins — compacting after the final
-            // write would burn a rewrite nothing ever reads
-            // compaction only applies to the unbounded layout: under
-            // retention the file count is already bounded by the window
-            // (>= one dir drop per batch), and the rewrite would flatten
-            // the bid partitioning the expiry relies on
-            if (retainBatches.isEmpty) {
-              if (maxBucketFiles(bandsDir) >= CompactBucketFiles)
-                compactStoreBands(sp, bandsDir)
-              // sig-table small-files maintenance (geometric trigger; a
-              // retention store never needs it — expiry bounds its files)
-              maybeCompactStoreSigs(sp, sigsDir)
-            }
-            // per-stage attribution at the body's natural action barriers
-            // (checkpoints/collect/writes) — prints only under
-            // GRAFT_STORE_TIMING, the measurement hook that found the 100×
-            // residual's real shape
-            val timing = sys.env.contains("GRAFT_STORE_TIMING")
-            var tMark = System.nanoTime()
-            def mark(stage: String): Unit = if (timing) {
-              val now = System.nanoTime()
-              System.err.println(s"[storetiming] $name b=$batchId " +
-                s"$stage=${(now - tMark) / 1000000}ms")
-              tMark = now
-            }
-            // Plain repartition(col), NOT the embdup engine's sized
-            // REPARTITION_BY_NUM spread — measured BOTH ways at 100×
-            // (r15): the spread moved this engine's 100× wall nowhere
-            // (GRAFT_STORE_TIMING put the cost in the verify joins below,
-            // sig eval only 4-6 s of a ~50 s batch — unlike embdup, where
-            // the single-task signature WAS the bottleneck) and its
-            // per-batch count job cost ~2-4 s per sf0.1 replay. Different
-            // engines, different bottlenecks; keep the measured shape.
-            val sigs = enrich(batch.repartition(col("doc_id")))
-              .localCheckpoint() // batch-sized; consumed by every branch
-            mark("sig")
-            val batchBands = bandsOf(sigs)
-              .withColumn("pb", bandBucket(col("band"), col("bh")))
-              .localCheckpoint() // batch-sized; 5 consumers
-            mark("bands")
-            // the batch's touched store buckets, per width: an O(1)-result
-            // driver scalar (≤ 2·StoreBuckets ints) that turns into the
-            // STATIC partition filter on the store scans below — the
-            // explicit isin is guaranteed pruning, where relying on
-            // runtime DPP insertion would hinge on the planner's
-            // selectivity heuristics
-            val touched = batchBands.select(col("w"), col("pb")).distinct()
-              .collect().map(r => (r.getInt(0), r.getInt(1)))
-            mark("touch")
-            val pb16 = touched.collect { case (16, p) => p }.toSeq
-            val pb4 = touched.collect { case (4, p) => p }.toSeq
-            val batchBands16 = batchBands.filter(col("w") === 16)
-            // tier 2: narrow-band candidate PAIRS, then the signature-
-            // overlap verify — the batch LSH rule run incrementally
-            // (a-side sigs from the store ∪ batch, b-side always this
-            // batch). Pairs are unavoidable here: the verify predicate is
-            // pairwise. Store-side pairs carry NO id filter (see the
-            // candidate rule above); same-batch pairs order by id.
-            // Candidate-join strategy rides the SAME corpus probe as the
-            // verify (r16, closing the r15-named held-stage residual):
-            // the batch side is batch-rows × 16 band keys — at the 100×
-            // replay ~1.3 M rows, a driver-serialized broadcast build per
-            // batch, TWICE, growing with the trigger size (a hazard no
-            // store bound caps). Above the threshold both candidate joins
-            // go SHUFFLE_HASH with the batch side as build: the store
-            // side exchanges NARROW band keys (no sig arrays) and nothing
-            // is sorted. Below the threshold the explicit broadcast is
-            // the plan that measured fastest at sf0.1 (hinting
-            // SHUFFLE_HASH there regressed ttl 19.3 → 22.8 s — the
-            // verify's rejection, same data).
-            val bbB = batchBands16.select(col("band"), col("bh"),
-              col("lang"), col("doc_id").as("b_id"))
-            // GRAFT_CAND_JOIN: measurement-only A/B override for the
-            // candidate-join strategy ("bcast" | "shj"); unset = the
-            // corpus-probe pick
-            val candShj = sys.env.get("GRAFT_CAND_JOIN") match {
-              case Some("bcast") => false
-              case Some("shj") => true
-              case _ => bigCorpus
-            }
-            def candJoin(aSide: DataFrame): DataFrame =
-              if (candShj)
-                aSide.join(bbB.hint("SHUFFLE_HASH"), Seq("band", "bh", "lang"))
-              else aSide.join(broadcast(bbB), Seq("band", "bh", "lang"))
-            val candCross = candJoin(
-              readStoreBands(sp, bandsDir, 16, pb16, minBid)
-                .select(col("band"), col("bh"), col("lang"),
-                  col("doc_id").as("a_id")))
-            val candSame = candJoin(batchBands16
-                .select(col("band"), col("bh"), col("lang"),
-                  col("doc_id").as("a_id")))
-              .filter(col("a_id") < col("b_id"))
-            // NO pair distinct (r16, the held-stage re-shape — the embdup
-            // engine's verify-then-distinct, now measured on THIS engine):
-            // a near-dup pair collides in up to 16 bands, and the r15
-            // distinct-then-verify shape exchanged + hash-aggregated that
-            // full multiplicity-inflated volume per batch (measured
-            // analytically on the 100× corpus: 34-170 M pre-distinct rows
-            // per batch folding to 7-33 M pairs, ×5 average multiplicity
-            // — the aggregate over it, not the batch-band broadcasts, was
-            // the held stage's wall). Duplicate collisions now just
-            // re-verify — the overlap fold is a codegen'd native
-            // expression (graft.functions.SigOverlap, one fused loop;
-            // the interpreted zip_with fold it replaced would have been
-            // the new wall at this volume) — and the only distinct left
-            // is the held b-id set, which collapses map-side to
-            // O(held docs) in the same stage as the verify filter.
-            // lang is a JOIN key above but not carried: the verified
-            // output re-attaches it from the batch-side sig broadcast —
-            // the candidate stream is the widest flow in the batch, and
-            // every dropped byte is ~170 M rows of exchange at 100×
-            val cand0 = candCross.unionByName(candSame)
-              .select(col("a_id"), col("b_id"))
-            // timing mode sizes the candidate stream with a COUNT-ONLY
-            // probe (no checkpoint: at 100× the stream is ~170 M rows —
-            // pinning it in the block manager would distort the very
-            // memory profile under test) — DIAGNOSTIC ONLY, doubles the
-            // candidate compute; the measured plan is the fused one
-            val cand = cand0
-            if (timing) mark(s"cand(rows=${cand0.count()})")
-            // Verify-join shape = the embdup engine's (r15 attribution:
-            // GRAFT_STORE_TIMING put 37-60 s of every 100× batch in this
-            // stage). Unhinted, BOTH sig attaches resolve to SortMergeJoin
-            // once the sig table passes the broadcast threshold — the
-            // candidate volume is then SORTED carrying 520 B signature
-            // arrays, twice. Instead: the a-side (store ∪ batch sigs,
-            // corpus-bounded, a few MB per partition at any scale) is the
-            // SHUFFLE_HASH build side with the NARROW id-pair stream
-            // probing it, and the b-side (always batch-sized, bounded by
-            // the trigger) rides an explicit broadcast; the overlap
-            // verify filters in the same stage, so candidate-volume rows
-            // are never exchanged or sorted wide.
-            val aSigs = readStoreSigs(sp, sigsDir, minBid).unionByName(
-                sigs.select(col("doc_id"), col("lang"), col("sig")))
-              .select(col("doc_id").as("a_id"), col("sig").as("sa"))
-            val bSigs = sigs.select(col("doc_id").as("b_id"),
-              col("lang"), col("sig").as("sb"))
-            // batch-fit probe for the b-side broadcast (the embdup twin's
-            // r17 rule — the batch sig broadcast is ~560 B/row and grows
-            // with the trigger, a build no store bound caps): counted on
-            // the CHECKPOINTED sigs (O(cached partitions), not an enrich
-            // recompute), and lazily — only the big-corpus regime reads
-            // it. Oversized batch → the linear fallback: batch side
-            // attaches by SHUFFLE_HASH first while the pair stream is
-            // narrow, then the store side; one exchange of candidate
-            // volume carrying one sig column, spillable where the
-            // broadcast build is a driver/executor OOM.
-            lazy val batchFits =
-              sigs.count() * 560L <= maxBatchBroadcastBytes
-            if (timing) System.err.println(s"[storetiming] $name " +
-              s"b=$batchId regime big=$bigCorpus fits=$batchFits")
-            val verifyIn =
-              if (!bigCorpus)
-                cand.join(aSigs, Seq("a_id")).join(bSigs, Seq("b_id"))
-              else if (batchFits)
-                cand.join(aSigs.hint("SHUFFLE_HASH"), Seq("a_id"))
-                  .join(broadcast(bSigs), Seq("b_id"))
-              else
-                cand.join(bSigs.hint("SHUFFLE_HASH"), Seq("b_id"))
-                  .join(aSigs.hint("SHUFFLE_HASH"), Seq("a_id"))
-            val verified0 = verifyIn
-              // early-exit predicate form: at the 100× verify volume the
-              // dominant class is FAILING pairs, which exit after ~20 of
-              // 64 positions instead of scanning the full signature
-              .filter(DedupQueries.sigOverlapAtLeast(col("sa"), col("sb"),
-                DedupQueries.VerifyMin))
-              .select(col("b_id").as("doc_id"), col("lang")).distinct()
-            // held output is tiny — the checkpointed split is safe here
-            val verified = if (timing) {
-              val v = verified0.localCheckpoint()
-              mark(s"verify(rows=${v.count()})")
-              v
-            } else verified0
-            // tier 1 flag needs only EXISTENCE of a smaller-id wide-band
-            // partner, so it aggregates bucket minima instead of joining
-            // out pairs — on a dup-dense corpus the wide buckets are
-            // cluster-sized and a pair join there is cluster-QUADRATIC
-            // (measured: the pair form put ~1 s of bucket fan-out into
-            // every batch); the min form is O(bucket count)
-            val batchBands4 = batchBands.filter(col("w") === 4)
-              .select(col("doc_id"), col("lang"), col("band"), col("bh"))
-            val wideMin = readStoreBands(sp, bandsDir, 4, pb4, minBid)
-              .unionByName(batchBands4)
-              .groupBy(col("band"), col("bh"), col("lang"))
-              .agg(min(col("doc_id")).as("mn"))
-            val tier1 = batchBands4
-              .join(wideMin, Seq("band", "bh", "lang"))
-              .filter(col("mn") < col("doc_id"))
-              .select(col("doc_id")).distinct()
-              .withColumn("t1", lit(1))
-            mark("plan")
-            verified.join(tier1, Seq("doc_id"), "left")
-              .select(col("doc_id"), col("lang"),
-                when(col("t1").isNotNull, 1).otherwise(2).as("tier"))
-              .write.mode("append").parquet(heldDir)
-            mark("held")
-            // append AFTER the reads above: all of this batch, held
-            // included — held docs still witness later arrivals. The bid
-            // stamp is the batch id (arrival retention) unless the caller
-            // supplied an event-bucket rule (event-time retention).
-            // PIPELINED (see storeWritePool above): scheduled here, awaited
-            // at the next batch's first store access — both frames are
-            // checkpointed, so the writes read pinned partitions, never a
-            // recompute racing this thread.
-            val bidCol = retainBatches.map(_ =>
-              eventBid.fold(lit(batchId))(f => f(batchId)))
-            pendingStoreWrite.set(storeWritePool.submit(new Runnable {
-              override def run(): Unit = {
-                // time the writes, not the hand-off gap since the batch
-                // thread's last mark
-                tMark = System.nanoTime()
-                // the pool thread inherited the STREAMING query's job group
-                // (thread-locals copy at thread creation): detach, or the
-                // engine's stop() after the final batch cancels the
-                // in-flight write mid-commit (measured: SPARK_JOB_CANCELLED
-                // on the last swrite). Own group + label per batch instead.
-                sp.sparkContext.setJobGroup(s"$name-storewrite",
-                  s"$name pipelined store write b=$batchId")
-                writeStoreBands(batchBands, bandsDir, bidCol)
-                mark("bwrite")
-                writeStoreSigs(sigs, sigsDir, bidCol)
-                mark("swrite")
-                // physical expiry AFTER this batch's reads: batch b+1 needs
-                // bids >= b+1-k, so everything below that floor is dead
-                // (under event-time bids this also reclaims late rows that
-                // arrived this batch already below the floor)
-                retainBatches.foreach { k =>
-                  dropExpiredBids(bandsDir, batchId + 1 - k)
-                  dropExpiredBids(sigsDir, batchId + 1 - k)
-                }
-                // endurance snapshot rides the write thread: wallMs now
-                // spans batch start → store writes durable (the honest
-                // per-batch cost; the overlap only moves WHEN it is paid),
-                // and the file counts are post-write as before
-                onBatch.foreach(f => f(BatchStats(batchId,
-                  (System.nanoTime() - tBatch0) / 1000000L,
-                  countParquetFiles(bandsDir), countParquetFiles(sigsDir),
-                  compactionsRun.get(), sigCompactionsRun.get(),
-                  retentionDrops.get())))
-              }
-            }))
-            } finally {
-              sp.conf.set("spark.sql.shuffle.partitions", streamPartitions)
-              sp.conf.set("spark.sql.adaptive.enabled", streamAqe)
-            }
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-      } {
-        // count only real part files: a batch with zero held rows still
-        // writes _SUCCESS, and read.parquet on a marker-only dir throws
-        // schema-inference errors instead of returning empty
-        val files = Option(new java.io.File(heldDir).listFiles())
-          .getOrElse(Array.empty)
-          .filter(isParquet)
-        if (files.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("lang",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("tier",
-                org.apache.spark.sql.types.IntegerType, nullable = false))))
-        else spark.read.parquet(heldDir)
-      }
-      // the FINAL batch's pipelined writes must land (or fail loudly)
-      // before this run is declared done and its store swept away
-      awaitStoreWrites()
-      // pin the (small) held set into block-manager memory BEFORE the
-      // scaffolding deletes below pull the lazy parquet read's files out
-      // from under it (a LogicalRDD carries partition data; callers sort)
-      held.localCheckpoint()
-    } finally {
-      // a crashed run may leave a write in flight: drain it (ignoring its
-      // error — the primary exception is already propagating) so the
-      // deletes below don't race a live writer, then stop the pool
-      scala.util.Try(awaitStoreWrites())
-      storeWritePool.shutdown()
-      // per-run scaffolding (r11 ADVICE low): the slice replay dir, the
-      // accumulated signature store, the held-rows spool, and the stream
-      // checkpoint are all run-local — without this, every bench/verify
-      // invocation left five fixture-scale dirs in /tmp outside the
-      // pid-suffixed orphan-reclaim scheme (stage dirs die inside the
-      // stagers)
-      Seq(incoming, storeDir, heldDir, ckpt)
-        .filterNot(sharedSliceDirs.contains)
-        .foreach(graft.Tables.deleteTree)
+    val timing = sys.env.contains("GRAFT_STORE_TIMING")
+    storeStreamRun(spark, name, "ndv", docs.schema, incoming,
+        StructType(Seq(longField("doc_id"), StructField("lang", StringType),
+          StructField("tier", IntegerType, nullable = false)))) {
+      (batch, batchId, store, heldDir) =>
+        val sp = batch.sparkSession
+        val tBatch0 = System.nanoTime()
+        // retention window floor: batch b may only see bids >= b - k
+        // (bid == slice index: maxFilesPerTrigger=1 over mtime-ordered
+        // slices — the same mapping the arrival-rule oracles rely on).
+        // Under EVENT-TIME retention (eventBid set) the floor is the
+        // same expression — the arrival frontier IS the watermark here
+        // (every batch carries on-time rows whose event bucket equals
+        // the batch id) — but stored rows sit at their EVENT bucket,
+        // so a late row's witness window is short or already over.
+        val minBid = retainBatches.map(k => batchId - k)
+        // per-stage attribution at the body's natural action barriers
+        // (checkpoints/collect/writes) — prints only under
+        // GRAFT_STORE_TIMING, the measurement hook that found the 100×
+        // residual's real shape
+        var tMark = System.nanoTime()
+        def mark(stage: String): Unit = if (timing) {
+          val now = System.nanoTime()
+          System.err.println(s"[storetiming] $name b=$batchId " +
+            s"$stage=${(now - tMark) / 1000000}ms")
+          tMark = now
+        }
+        // Plain repartition(col), NOT the embdup engine's sized
+        // REPARTITION_BY_NUM spread — measured BOTH ways at 100×
+        // (r15): the spread moved this engine's 100× wall nowhere
+        // (GRAFT_STORE_TIMING put the cost in the verify joins below,
+        // sig eval only 4-6 s of a ~50 s batch — unlike embdup, where
+        // the single-task signature WAS the bottleneck) and its
+        // per-batch count job cost ~2-4 s per sf0.1 replay. Different
+        // engines, different bottlenecks; keep the measured shape.
+        val sigs = enrich(batch.repartition(col("doc_id")))
+          .localCheckpoint() // batch-sized; consumed by every branch
+        mark("sig")
+        val batchBands = bandsOf(sigs)
+          .withColumn("pb", bandBucket(col("band"), col("bh")))
+          .localCheckpoint() // batch-sized; 5 consumers
+        mark("bands")
+        // the store's first access (store.dir waits for the previous
+        // batch's appends): small-files maintenance (see
+        // compactStoreBands). A batch-start trigger means the rewrite is
+        // always read back by this batch's candidate joins — compacting
+        // after the final write would burn a rewrite nothing ever reads.
+        // Only the unbounded layout compacts: under retention the file
+        // count is already bounded by the window (>= one dir drop per
+        // batch), and the rewrite would flatten the bid partitioning the
+        // expiry relies on; the sig table uses the geometric trigger
+        if (retainBatches.isEmpty) {
+          if (maxBucketFiles(store.dir("bands")) >= CompactBucketFiles)
+            compactStoreBands(sp, store.dir("bands"))
+          maybeCompactStoreSigs(sp, store.dir("sigs"))
+        }
+        // the batch's touched store buckets, per width: an O(1)-result
+        // driver scalar (≤ 2·StoreBuckets ints) that turns into the
+        // STATIC partition filter on the store scans below — the
+        // explicit isin is guaranteed pruning, where relying on
+        // runtime DPP insertion would hinge on the planner's
+        // selectivity heuristics
+        val touched = batchBands.select(col("w"), col("pb")).distinct()
+          .collect().map(r => (r.getInt(0), r.getInt(1)))
+        mark("touch")
+        val pb16 = touched.collect { case (16, p) => p }.toSeq
+        val pb4 = touched.collect { case (4, p) => p }.toSeq
+        // tier 2: narrow-band candidate PAIRS, then the signature-
+        // overlap verify — the batch LSH rule run incrementally
+        // (a-side sigs from the store ∪ batch, b-side always this
+        // batch). lang is a join key but not carried: the verified
+        // output re-attaches it from the batch-side sigs — the candidate
+        // stream is the widest flow in the batch (~170 M rows at 100×)
+        def keyed(df: DataFrame): DataFrame = df.select(col("band"),
+          col("bh"), col("lang"), col("doc_id").as("id"))
+        val cand = candidatePairs(
+          keyed(readStoreBands(sp, store.dir("bands"), 16, pb16, minBid)),
+          keyed(batchBands.filter(col("w") === 16)),
+          Seq("band", "bh", "lang"), shuffled = bigCorpus)
+        // timing mode sizes the candidate stream with a COUNT-ONLY
+        // probe (no checkpoint: at 100× the stream is ~170 M rows —
+        // pinning it would distort the very memory profile under test)
+        // — DIAGNOSTIC ONLY, doubles the candidate compute
+        if (timing) mark(s"cand(rows=${cand.count()})")
+        val aSigs = readStoreSigs(sp, store.dir("sigs"), minBid).unionByName(
+            sigs.select(col("doc_id"), col("lang"), col("sig")))
+          .select(col("doc_id").as("a_id"), col("sig").as("sa"))
+        val bSigs = sigs.select(col("doc_id").as("b_id"),
+          col("lang"), col("sig").as("sb"))
+        if (timing) System.err.println(
+          s"[storetiming] $name b=$batchId regime big=$bigCorpus")
+        // the batch-fit count runs on the CHECKPOINTED sigs (O(cached
+        // partitions), not an enrich recompute), big regime only
+        val verified0 = verifyJoin(cand, aSigs, bSigs, bigCorpus, sigs.count())
+          // early-exit predicate form: at the 100× verify volume the
+          // dominant class is FAILING pairs, which exit after ~20 of
+          // 64 positions instead of scanning the full signature
+          .filter(DedupQueries.sigOverlapAtLeast(col("sa"), col("sb"),
+            DedupQueries.VerifyMin))
+          .select(col("b_id").as("doc_id"), col("lang")).distinct()
+        // held output is tiny — the checkpointed split is safe here
+        val verified = if (timing) {
+          val v = verified0.localCheckpoint()
+          mark(s"verify(rows=${v.count()})")
+          v
+        } else verified0
+        // tier 1 flag needs only EXISTENCE of a smaller-id wide-band
+        // partner, so it aggregates bucket minima instead of joining
+        // out pairs — on a dup-dense corpus the wide buckets are
+        // cluster-sized and a pair join there is cluster-QUADRATIC
+        // (measured: the pair form put ~1 s of bucket fan-out into
+        // every batch); the min form is O(bucket count)
+        val batchBands4 = batchBands.filter(col("w") === 4)
+          .select(col("doc_id"), col("lang"), col("band"), col("bh"))
+        val wideMin = readStoreBands(sp, store.dir("bands"), 4, pb4, minBid)
+          .unionByName(batchBands4)
+          .groupBy(col("band"), col("bh"), col("lang"))
+          .agg(min(col("doc_id")).as("mn"))
+        val tier1 = batchBands4
+          .join(wideMin, Seq("band", "bh", "lang"))
+          .filter(col("mn") < col("doc_id"))
+          .select(col("doc_id")).distinct()
+          .withColumn("t1", lit(1))
+        mark("plan")
+        verified.join(tier1, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("lang"),
+            when(col("t1").isNotNull, 1).otherwise(2).as("tier"))
+          .write.mode("append").parquet(heldDir)
+        mark("held")
+        // append AFTER the reads above: all of this batch, held
+        // included — held docs still witness later arrivals. The bid
+        // stamp is the batch id (arrival retention) unless the caller
+        // supplied an event-bucket rule (event-time retention).
+        val bidCol = retainBatches.map(_ =>
+          eventBid.fold(lit(batchId))(f => f(batchId)))
+        store.submit(sp, batchId) { at =>
+          tMark = System.nanoTime() // time the writes, not the hand-off
+          writeStoreBands(batchBands, at("bands"), bidCol, store.partitions)
+          mark("bwrite")
+          writeStoreSigs(sigs, at("sigs"), bidCol)
+          mark("swrite")
+          // physical expiry AFTER this batch's reads: batch b+1 needs
+          // bids >= b+1-k (under event-time bids this also reclaims late
+          // rows that arrived this batch already below the floor)
+          retainBatches.foreach(k => Seq(at("bands"), at("sigs"))
+            .foreach(dropExpiredBids(_, batchId + 1 - k)))
+          // endurance snapshot rides the write thread: wallMs spans
+          // batch start → store writes durable (the honest per-batch
+          // cost; the overlap only moves WHEN it is paid), and the file
+          // counts are post-write
+          onBatch.foreach(f => f(BatchStats(batchId,
+            (System.nanoTime() - tBatch0) / 1000000L,
+            countParquetFiles(at("bands")), countParquetFiles(at("sigs")),
+            compactionsRun.get(), sigCompactionsRun.get(),
+            retentionDrops.get())))
+        }
     }
   }
 
@@ -2292,24 +2202,21 @@ object StreamingQueries {
     * partner x covers y iff slice(y) − slice(x) ≤ 2 with the arrival
     * tie-break on equal slices.
     */
-  /** The TTL query body at an arbitrary window K (and replay slice count):
-    * the registry entry pins K = [[TtlWindowBatches]]; `tools.TtlCurve`
-    * sweeps other K values over the SAME replay to turn the
-    * recall-vs-state trade into a curve (r13 verdict ask #5).
-    */
-  private[graft] def ttlMetrics(spark: SparkSession, dir: String,
-      name: String, k: Int, slices: Int = 6): DataFrame = {
+  val streamNeardupTtl = QueryDef(
+    "stream_neardup_ttl",
+    (spark, dir) => {
       val docs = graft.Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
-      val held = neardupStoreRun(spark, name, docs,
-          stageDocModSlicesShared(docs, dir, slices), retainBatches = Some(k))
+      val held = neardupStoreRun(spark, "stream_neardup_ttl", docs,
+          stageDocModSlicesShared(docs, dir, 6),
+          retainBatches = Some(TtlWindowBatches))
         .select(col("doc_id"), lit(1).as("held"))
       // family-shared verifiedPairs cache — see stream_neardup_unordered
       // (raw load frame for the one-entry plan key)
       val pairs = DedupQueries.verifiedPairs(
           graft.Tables.load(spark, dir, "documents"))
         .select(col("a_id"), col("b_id"))
-      val sl = lit(slices)
+      val sl = lit(6)
       val earlierA = (col("a_id") % sl < col("b_id") % sl) ||
         (col("a_id") % sl === col("b_id") % sl && col("a_id") < col("b_id"))
       val heldFull = pairs
@@ -2334,12 +2241,7 @@ object StreamingQueries {
       // pairs is the shared cache, not per-run)
       GraftSqlBridge.unpersistLocalCheckpoint(held)
       result.orderBy(col("lang"))
-  }
-
-  val streamNeardupTtl = QueryDef(
-    "stream_neardup_ttl",
-    (spark, dir) =>
-      ttlMetrics(spark, dir, "stream_neardup_ttl", TtlWindowBatches),
+    },
     Some {
       import DedupQueries.{tokHashSql, minColsSql, bandSelectsSql,
         matchTermsSql, VerifyMin}
@@ -2642,54 +2544,20 @@ object StreamingQueries {
     // (StoreEndurance A/Bs the knob in-stream); registry runs derive.
     val nVecs = emb.count() // metadata-only; shared by bits + regime probe
     val embBits = bitsOverride.getOrElse(VectorQueries.autoEmbBits(nVecs))
-    val storeDir = Files.createTempDirectory("graft-emb-store").toString
-    val bandsDir = s"$storeDir/bands"
-    val vecsDir = s"$storeDir/vecs"
-    val heldDir = Files.createTempDirectory("graft-emb-held").toString
-    val ckpt = Files.createTempDirectory("graft-emb-ck").toString
-    val batchPartitions = spark.conf.get("spark.sql.shuffle.partitions")
     // the SESSION's broadcast threshold, read once at stream start (the
-    // text engine's discipline verbatim): the per-batch candidate-join
-    // regime pick below compares the micro-batch band table's estimated
-    // build size against it, so a session that disables auto-broadcast
-    // (-1) lands in the hinted SHUFFLE_HASH regime instead of falling
-    // back to an unhinted SortMergeJoin
+    // text engine's discipline): both regime probes compare against it,
+    // so a session that disables auto-broadcast (-1) lands hinted.
+    // Verify regime (see verifyJoin) is CORPUS-conditional, the text
+    // engine's rule (r17, measured on THIS engine: dropping the r16
+    // unconditional SHUFFLE_HASH hint below the threshold read
+    // neutral-to-slightly-positive at sf0.1, 5.34 → 5.07 s; adopted for
+    // one-rule parity). ~560 B/row = id + 64-double array + overhead.
     val bcBytes = sessionBroadcastThreshold(spark)
-    // Verify-join strategy is CORPUS-conditional, the text engine's rule
-    // (r17 — measured on THIS engine, BASELINE r17 log): below the
-    // threshold the whole vec table auto-broadcasts and the candidate
-    // stream never shuffles — dropping the r16 unconditional
-    // SHUFFLE_HASH hint there measured NEUTRAL-to-slightly-positive at
-    // sf0.1 (5.34 → 5.07 s min, inside the ±0.5 s window noise; the
-    // id-pair stream the hint exchanged is narrow, so the cost was
-    // small — unlike the text engine where the same forced hint cost
-    // 18%). Adopted anyway for one-rule parity: above the threshold,
-    // unhinted degrades to SortMergeJoin sorting candidate volume
-    // carrying 520 B vector arrays, so the hinted shape (store-side
-    // SHUFFLE_HASH build + batch-side broadcast) is the 100× plan —
-    // unchanged from r16 — and a session that disables auto-broadcast
-    // (-1) deliberately lands hinted. ~560 B/row = id + 64-double
-    // array + row overhead; count is metadata-only.
     val bigCorpus = bcBytes <= 0 || nVecs * 560L > bcBytes
-    // pipelined store appends (guide §2.6), the text engine's r18 shape:
-    // the two appends + expiry are commit-bound work nothing in the same
-    // batch reads; they overlap the next trigger's row-local sig/band work
-    // and are awaited before the next batch's first store access
-    val storeWritePool = java.util.concurrent.Executors.newSingleThreadExecutor()
-    val pendingStoreWrite =
-      new java.util.concurrent.atomic.AtomicReference[
-        java.util.concurrent.Future[_]](null)
-    def awaitStoreWrites(): Unit = {
-      val f = pendingStoreWrite.getAndSet(null)
-      if (f != null) f.get()
-    }
-    def readBands(sp: SparkSession, pbs: Seq[Int],
+    def readBands(sp: SparkSession, dir: String, pbs: Seq[Int],
         minBid: Option[Long]): DataFrame =
-      readOrEmpty(sp, bandsDir, org.apache.spark.sql.types.StructType(Seq(
-        longField("vec_id"),
-        org.apache.spark.sql.types.StructField("band",
-          org.apache.spark.sql.types.IntegerType),
-        longField("bv")))) { df =>
+      readOrEmpty(sp, dir, StructType(Seq(longField("vec_id"),
+          StructField("band", IntegerType), longField("bv")))) { df =>
         val base = df.filter(inBuckets(col("pb"), pbs))
         // retention window: bid is the OUTERMOST partition dir — the text
         // store's discipline verbatim (partition-pruned filter is the
@@ -2697,245 +2565,109 @@ object StreamingQueries {
         minBid.fold(base)(m => base.filter(col("bid") >= m))
           .select(col("vec_id"), col("band"), col("bv"))
       }
-    def readVecs(sp: SparkSession, minBid: Option[Long]): DataFrame =
-      readOrEmpty(sp, vecsDir, org.apache.spark.sql.types.StructType(Seq(
-        longField("vec_id"),
-        org.apache.spark.sql.types.StructField("v",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType))))) { df =>
+    def readVecs(sp: SparkSession, dir: String,
+        minBid: Option[Long]): DataFrame =
+      readOrEmpty(sp, dir, StructType(Seq(longField("vec_id"),
+          StructField("v", ArrayType(DoubleType))))) { df =>
         minBid.fold(df)(m => df.filter(col("bid") >= m))
           .select(col("vec_id"), col("v"))
       }
-    pinThenClean(incoming, storeDir, heldDir, ckpt) {
-      try {
-      val held = runSink(spark, name) {
-        val stream = spark.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", "1").parquet(incoming)
-        stream.writeStream
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            val sp = batch.sparkSession
-            val tBatch0 = System.nanoTime()
-            // retention window floor (the text engine's rule verbatim):
-            // batch b may only witness bids >= b - k
-            val minBid = retainBatches.map(k => batchId - k)
-            val streamPartitions = sp.conf.get("spark.sql.shuffle.partitions")
-            val streamAqe = sp.conf.get("spark.sql.adaptive.enabled")
-            sp.conf.set("spark.sql.shuffle.partitions", batchPartitions)
-            sp.conf.set("spark.sql.adaptive.enabled", "true")
-            try {
-            // SPREAD BEFORE THE SIGNATURE EVAL (r15 scale finding): the
-            // staged slice is ONE parquet file, so the batch scan is one
-            // partition — and everything up to the first exchange runs in
-            // ONE TASK. At 100× that single task evaluates the 2·bits-
-            // plane HOF signature over 66 k vectors: measured ~23 s/batch
-            // FLAT across batches (store-size-independent — the giveaway
-            // that banding volume wasn't the cost), masking the band
-            // knob entirely. The text engine has this discipline in its
-            // enrich (batch.repartition(doc_id)). Sized to the batch —
-            // ~4 k rows/task, one metadata-only count job — because both
-            // fixed alternatives lose: a flat 32-way spread costs ~3 s of
-            // many-task overhead per sf0.1 replay (measured 5.2 → 8.6 s),
-            // and AQE's size-based coalescing is exactly wrong for this
-            // stage (HOF compute per byte is enormous — a ~35 MB exchange
-            // coalesces back to 1-2 partitions), so the explicit
-            // numPartitions form (REPARTITION_BY_NUM) pins the fan-out.
-            val batchRows = batch.count()
-            val nBatchParts = math.max(1L, math.min(batchPartitions.toLong,
-              (batchRows + 4095) / 4096)).toInt
-            // nBatchParts == 1 skips the exchange outright: a 1-partition
-            // repartition still pays a full shuffle round trip per batch
-            // (~0.3 s/batch at sf0.1) for a plan identical to the input
-            val spread = if (nBatchParts > 1)
-              batch.repartition(nBatchParts, col("vec_id")) else batch
-            val vs = spread
-              .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
-              // width derived from the SAME knobs as the banding rule
-              // (second review pass: a hardcoded 16 here would desync
-              // from a one-site knob change in VectorQueries)
-              .withColumn("sig", signLsh(col("v"),
-                VectorQueries.EmbBands * embBits))
-              .localCheckpoint() // batch-sized; 4 consumers
-            // banding rule stated once engine-wide (VectorQueries
-            // .embBandPairs) — a one-site band-width change cannot split
-            // the streamed candidate set from the batch/oracle pair set
-            val bb = VectorQueries.embBandPairs(col("sig"), embBits).map {
-                case (b, bv) => vs.select(col("vec_id"),
-                  lit(b).as("band"), bv.as("bv"))
-              }.reduce(_ unionByName _)
-              .withColumn("pb", pmod(hash(col("band"), col("bv")),
-                lit(StoreBuckets)))
-              .localCheckpoint() // batch-sized; 3 consumers
-            // O(1)-result driver scalar → static partition filter (the
-            // text engine's guaranteed-pruning discipline)
-            val pbs = bb.select(col("pb")).distinct()
-              .collect().map(_.getInt(0)).toSeq
-            // Candidate-join strategy is BATCH-SIZE-conditional (r17,
-            // closing the r16 verdict's one weak item): bb is batch rows
-            // × EmbBands narrow band rows, so the explicit broadcast that
-            // is right at this fixture's trigger sizes becomes a
-            // driver-serialized build growing with the trigger at
-            // production batch sizes — the exact hazard class the text
-            // engine's candidate joins gate with the corpus probe (its
-            // batch body never counts the batch, so corpus is its bound;
-            // here nBatchParts already materialized batchRows, so the
-            // probe is exact and free). Above the SESSION's broadcast
-            // threshold (same threshold read as the text engine's —
-            // a session that disables auto-broadcast must land in the
-            // hinted regime) both joins go SHUFFLE_HASH with bb as the
-            // BUILD side: the store side exchanges narrow (band, bv, id)
-            // keys, nothing is sorted, and the build stays batch-bounded
-            // per partition. ~48 B/row = 20 B data (id + band + bv) +
-            // hashed-relation overhead. GRAFT_CAND_JOIN ("bcast"|"shj")
-            // is the measurement-only override, the text engine's knob.
-            // the previous batch's pipelined appends must be durable before
-            // the store reads below list it (everything above is row-local
-            // batch work — the overlap window the pipeline exists for)
-            awaitStoreWrites()
-            val bbB = bb.select(col("band"), col("bv"),
-              col("vec_id").as("b_id"))
-            val candShj = sys.env.get("GRAFT_CAND_JOIN") match {
-              case Some("bcast") => false
-              case Some("shj") => true
-              case _ => bcBytes <= 0 ||
-                batchRows * VectorQueries.EmbBands * 48L > bcBytes
-            }
-            def candJoin(aSide: DataFrame): DataFrame =
-              if (candShj)
-                aSide.join(bbB.hint("SHUFFLE_HASH"), Seq("band", "bv"))
-              else aSide.join(broadcast(bbB), Seq("band", "bv"))
-            val candCross = candJoin(readBands(sp, pbs, minBid)
-              .select(col("band"), col("bv"), col("vec_id").as("a_id")))
-            val candSame = candJoin(bb
-              .select(col("band"), col("bv"), col("vec_id").as("a_id")))
-              .filter(col("a_id") < col("b_id"))
-            // NO pair distinct and NO wide exchange (the batch engine's
-            // verify-then-distinct lesson, EmbBandAB/ScaleEvidence: the
-            // old shape — distinct the id pairs, then join the store
-            // vecs — re-exchanges the candidate volume once it carries a
-            // 64-dim array, and measured 251 s/100× on the decorrelated
-            // corpus. Here the stream gives one more lever than batch:
-            // the b side is always BATCH-sized (bounded by the trigger),
-            // so bv2 rides an explicit broadcast; av attaches via a
-            // shuffled-hash join whose BUILD side is the store vecs
-            // (a few MB per partition at any corpus) and whose streamed
-            // side is the NARROW id pair; verification filters in the
-            // same stage, and the only distinct left is the held
-            // vec-id set, bounded by the corpus. Duplicate band
-            // collisions just re-verify (≤ bands× cheap cosine evals) —
-            // they cannot duplicate held ids past the final distinct.
-            val cand = candCross.unionByName(candSame)
-              .select(col("a_id"), col("b_id"))
-            val aVecs = readVecs(sp, minBid).unionByName(
-                vs.select(col("vec_id"), col("v")))
-              .select(col("vec_id").as("a_id"), col("v").as("av"))
-            val bVecs = vs.select(col("vec_id").as("b_id"),
-              col("v").as("bv2"))
-            // The b-side broadcast is BATCH-sized vectors (~560 B/row) —
-            // a bigger build than the band table the candidate gate just
-            // sized (r17 review finding: gating the 96 B/row build while
-            // broadcasting the 560 B/row one unconditionally closes
-            // nothing). Three regimes: small corpus → unhinted (the vec
-            // table auto-broadcasts, zero exchanges); big corpus + batch
-            // under the threshold (every production-sized trigger) → the
-            // measured shape: store-side SHUFFLE_HASH build probed by the
-            // narrow pair stream, batch vectors broadcast, verify fused,
-            // nothing wide exchanged; big corpus + OVERSIZED batch → the
-            // LINEAR fallback: attach the batch side by SHUFFLE_HASH
-            // FIRST (pair stream exchanges narrow ids on b_id, build is
-            // batch/partitions rows per task), then the store side — one
-            // exchange of candidate volume carrying one vector column,
-            // linear and spillable where the broadcast build is a
-            // driver/executor OOM. The bound is [[maxBatchBroadcastBytes]]
-            // (a feasibility cap), NOT the session's auto threshold —
-            // this build is an engineered choice whose alternative
-            // exchanges candidate volume wide (rationale at the cap).
-            val batchFits = batchRows * 560L <= maxBatchBroadcastBytes
-            val verifyIn =
-              if (!bigCorpus)
-                cand.join(aVecs, Seq("a_id")).join(bVecs, Seq("b_id"))
-              else if (batchFits)
-                cand.join(aVecs.hint("SHUFFLE_HASH"), Seq("a_id"))
-                  .join(broadcast(bVecs), Seq("b_id"))
-              else
-                cand.join(bVecs.hint("SHUFFLE_HASH"), Seq("b_id"))
-                  .join(aVecs.hint("SHUFFLE_HASH"), Seq("a_id"))
-            verifyIn
-              .filter(graft.Tables.basisPoints(
-                cosine(col("av"), col("bv2"))) >= 1000)
-              .select(col("b_id").as("vec_id")).distinct()
-              .write.mode("append").parquet(heldDir)
-            // append AFTER the reads: held vectors still witness later
-            // arrivals (the removable-set closure, as in the text engine).
-            // PIPELINED (storeWritePool above): scheduled here, awaited at
-            // the next batch's first store access; both frames are
-            // checkpointed, so the writes read pinned partitions
-            pendingStoreWrite.set(storeWritePool.submit(new Runnable {
-              override def run(): Unit = {
-                // detach from the streaming query's inherited job group or
-                // the engine's stop() cancels the final in-flight commit
-                sp.sparkContext.setJobGroup(s"$name-storewrite",
-                  s"$name pipelined store write b=$batchId")
-                retainBatches match {
-                  case None =>
-                    bb.repartition(col("pb"))
-                      .write.mode("append").partitionBy("pb").parquet(bandsDir)
-                    vs.select(col("vec_id"), col("v"))
-                      .write.mode("append").parquet(vecsDir)
-                  case Some(k) =>
-                    // retention layout: bid OUTERMOST so expiry is one dir
-                    // drop — writeStoreBands' discipline on the emb schema
-                    bb.withColumn("bid", lit(batchId))
-                      .repartition(col("pb"))
-                      .write.mode("append").partitionBy("bid", "pb")
-                      .parquet(bandsDir)
-                    vs.select(col("vec_id"), col("v"))
-                      .withColumn("bid", lit(batchId))
-                      .write.mode("append").partitionBy("bid").parquet(vecsDir)
-                    // physical expiry AFTER this batch's reads: batch b+1
-                    // needs bids >= b+1-k
-                    dropExpiredBids(bandsDir, batchId + 1 - k)
-                    dropExpiredBids(vecsDir, batchId + 1 - k)
-                }
-                // sigFiles carries the VEC table's file count here (the emb
-                // store's second table), and the compaction counters are
-                // hard ZERO: this engine runs no compaction (retention bounds
-                // its files), and threading the TEXT engine's JVM-global
-                // counters through would report a prior text run's activity
-                // as this store's (r15 ADVICE). wallMs spans batch start →
-                // store writes durable (the text engine's r18 convention)
-                onBatch.foreach(f => f(BatchStats(batchId,
-                  (System.nanoTime() - tBatch0) / 1000000L,
-                  countParquetFiles(bandsDir), countParquetFiles(vecsDir),
-                  0L, 0L, retentionDrops.get())))
-              }
-            }))
-            } finally {
-              sp.conf.set("spark.sql.shuffle.partitions", streamPartitions)
-              sp.conf.set("spark.sql.adaptive.enabled", streamAqe)
-            }
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-      } {
-        val files = Option(new java.io.File(heldDir).listFiles())
-          .getOrElse(Array.empty).filter(isParquet)
-        if (files.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("vec_id",
-                org.apache.spark.sql.types.LongType))))
-        else spark.read.parquet(heldDir)
-      }
-      // the FINAL batch's pipelined writes must land (or fail loudly)
-      // before pinThenClean sweeps the store away
-      awaitStoreWrites()
-      held
-      } finally {
-        scala.util.Try(awaitStoreWrites())
-        storeWritePool.shutdown()
-      }
+    storeStreamRun(spark, name, "emb", emb.schema, incoming,
+        StructType(Seq(longField("vec_id")))) {
+      (batch, batchId, store, heldDir) =>
+        val sp = batch.sparkSession
+        val tBatch0 = System.nanoTime()
+        // retention window floor (the text engine's rule verbatim):
+        // batch b may only witness bids >= b - k
+        val minBid = retainBatches.map(k => batchId - k)
+        // SPREAD BEFORE THE SIGNATURE EVAL (r15 scale finding): the
+        // staged slice is ONE parquet file, so the batch scan is one
+        // partition — and everything up to the first exchange runs in
+        // ONE TASK. At 100× that single task evaluates the 2·bits-
+        // plane HOF signature over 66 k vectors: measured ~23 s/batch
+        // FLAT across batches (store-size-independent — the giveaway
+        // that banding volume wasn't the cost), masking the band
+        // knob entirely. The text engine has this discipline in its
+        // enrich (batch.repartition(doc_id)). Sized to the batch —
+        // ~4 k rows/task, one metadata-only count job — because both
+        // fixed alternatives lose: a flat 32-way spread costs ~3 s of
+        // many-task overhead per sf0.1 replay (measured 5.2 → 8.6 s),
+        // and AQE's size-based coalescing is exactly wrong for this
+        // stage (HOF compute per byte is enormous — a ~35 MB exchange
+        // coalesces back to 1-2 partitions), so the explicit
+        // numPartitions form (REPARTITION_BY_NUM) pins the fan-out.
+        val batchRows = batch.count()
+        val nBatchParts = math.max(1L, math.min(store.partitions.toLong,
+          (batchRows + 4095) / 4096)).toInt
+        // nBatchParts == 1 skips the exchange outright: a 1-partition
+        // repartition still pays a full shuffle round trip per batch
+        // (~0.3 s/batch at sf0.1) for a plan identical to the input
+        val spread = if (nBatchParts > 1)
+          batch.repartition(nBatchParts, col("vec_id")) else batch
+        val vs = spread
+          .select(col("vec_id"), toDoubleArray(col("embedding")).as("v"))
+          // width derived from the SAME knobs as the banding rule
+          // (second review pass: a hardcoded 16 here would desync
+          // from a one-site knob change in VectorQueries)
+          .withColumn("sig", signLsh(col("v"),
+            VectorQueries.EmbBands * embBits))
+          .localCheckpoint() // batch-sized; 4 consumers
+        // banding rule stated once engine-wide (VectorQueries
+        // .embBandPairs) — a one-site band-width change cannot split
+        // the streamed candidate set from the batch/oracle pair set
+        val bb = VectorQueries.embBandPairs(col("sig"), embBits).map {
+            case (b, bv) => vs.select(col("vec_id"),
+              lit(b).as("band"), bv.as("bv"))
+          }.reduce(_ unionByName _)
+          .withColumn("pb", pmod(hash(col("band"), col("bv")),
+            lit(StoreBuckets)))
+          .localCheckpoint() // batch-sized; 3 consumers
+        // O(1)-result driver scalar → static partition filter (the
+        // text engine's guaranteed-pruning discipline)
+        val pbs = bb.select(col("pb")).distinct()
+          .collect().map(_.getInt(0)).toSeq
+        // Candidate-join regime is BATCH-SIZE-conditional (r17): bb is
+        // batch rows × EmbBands narrow band rows, so the broadcast that
+        // is right at this fixture's trigger sizes grows with the trigger
+        // at production batch sizes. The probe is exact and free here
+        // (batchRows is already counted). ~48 B/row = 20 B data (id +
+        // band + bv) + hashed-relation overhead. store.dir is the store's
+        // first access: everything above is the row-local batch work the
+        // previous batch's appends overlap.
+        def keyed(df: DataFrame): DataFrame =
+          df.select(col("band"), col("bv"), col("vec_id").as("id"))
+        val cand = candidatePairs(
+          keyed(readBands(sp, store.dir("bands"), pbs, minBid)), keyed(bb),
+          Seq("band", "bv"), shuffled = bcBytes <= 0 ||
+            batchRows * VectorQueries.EmbBands * 48L > bcBytes)
+        val aVecs = readVecs(sp, store.dir("vecs"), minBid).unionByName(
+            vs.select(col("vec_id"), col("v")))
+          .select(col("vec_id").as("a_id"), col("v").as("av"))
+        val bVecs = vs.select(col("vec_id").as("b_id"), col("v").as("bv2"))
+        verifyJoin(cand, aVecs, bVecs, bigCorpus, batchRows)
+          .filter(graft.Tables.basisPoints(
+            cosine(col("av"), col("bv2"))) >= 1000)
+          .select(col("b_id").as("vec_id")).distinct()
+          .write.mode("append").parquet(heldDir)
+        // append AFTER the reads: held vectors still witness later
+        // arrivals (the removable-set closure, as in the text engine)
+        store.submit(sp, batchId) { at =>
+          val bid = retainBatches.map(_ => lit(batchId))
+          appendStore(bb, at("bands"), bid, Seq("pb"), store.partitions)
+          appendStore(vs.select(col("vec_id"), col("v")), at("vecs"), bid)
+          retainBatches.foreach(k => Seq(at("bands"), at("vecs"))
+            .foreach(dropExpiredBids(_, batchId + 1 - k)))
+          // sigFiles carries the VEC table's file count here (the emb
+          // store's second table), and the compaction counters are
+          // hard ZERO: this engine runs no compaction (retention bounds
+          // its files), and threading the TEXT engine's JVM-global
+          // counters through would report a prior text run's activity
+          // as this store's (r15 ADVICE)
+          onBatch.foreach(f => f(BatchStats(batchId,
+            (System.nanoTime() - tBatch0) / 1000000L,
+            countParquetFiles(at("bands")), countParquetFiles(at("vecs")),
+            0L, 0L, retentionDrops.get())))
+        }
     }
   }
 
@@ -3002,158 +2734,97 @@ object StreamingQueries {
     (spark, dir) => {
       val docs = graft.Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
-      val storeDir = Files.createTempDirectory("graft-scq-store").toString
-      val fpDir = s"$storeDir/fps"
-      val cntDir = s"$storeDir/counts"
-      val spoolDir = Files.createTempDirectory("graft-scq-spool").toString
-      val ckpt = Files.createTempDirectory("graft-scq-ck").toString
-      val incoming = stageDocRangeSlices(docs, 3)
-      val batchPartitions = spark.conf.get("spark.sql.shuffle.partitions")
-      // pipelined state appends (guide §2.6, the store engines' r18 shape):
-      // the fp/count appends are commit tail work; they overlap the next
-      // trigger's row-local gate scoring and are awaited before the next
-      // batch's first state read
-      val storeWritePool =
-        java.util.concurrent.Executors.newSingleThreadExecutor()
-      val pendingStoreWrite =
-        new java.util.concurrent.atomic.AtomicReference[
-          java.util.concurrent.Future[_]](null)
-      def awaitStoreWrites(): Unit = {
-        val f = pendingStoreWrite.getAndSet(null)
-        if (f != null) f.get()
-      }
-      val verdicts = pinThenClean(incoming, storeDir, spoolDir, ckpt) {
-        try {
-        val held = runSink(spark, "stream_curate_quota") {
-          val stream = spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "1").parquet(incoming)
-          stream.writeStream
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              val sp = batch.sparkSession
-              val streamPartitions = sp.conf.get("spark.sql.shuffle.partitions")
-              val streamAqe = sp.conf.get("spark.sql.adaptive.enabled")
-              sp.conf.set("spark.sql.shuffle.partitions", batchPartitions)
-              sp.conf.set("spark.sql.adaptive.enabled", "true")
-              try {
-                val toks = split(col("text"), " ")
-                val scored = batch.repartition(col("doc_id"))
-                  .select(col("doc_id"), col("lang"),
-                    md5(concat_ws(" ",
-                      array_sort(array_distinct(toks))).cast("binary"))
-                      .as("fp"),
-                    size(toks).cast("long").as("n_tok"),
-                    size(array_distinct(toks)).cast("long").as("n_dis"),
-                    graft.Tables.occurrenceCount(toks,
-                      Seq("the", "a", "and", "of", "in")).cast("long")
-                      .as("n_stop"))
-                  .withColumn("dis_bp",
-                    floor(col("n_dis") * 10000 / col("n_tok")).cast("long"))
-                  .withColumn("stop_bp",
-                    floor(col("n_stop") * 10000 / col("n_tok")).cast("long"))
-                  .withColumn("gate_fail",
-                    when(col("n_tok") < 30, "1_short")
-                      .when(col("dis_bp") < 3000, "2_repetitive")
-                      .when(col("stop_bp") < 200 || col("stop_bp") > 2500,
-                        "3_stop_profile"))
-                  .withColumn("pb", pmod(hash(col("fp")), lit(StoreBuckets)))
-                  .localCheckpoint() // batch-sized; all branches below
-                val gatepass = scored.filter(col("gate_fail").isNull)
-                // touched fp buckets → static partition filter (O(1) rows)
-                val pbs = gatepass.select(col("pb")).distinct()
-                  .collect().map(_.getInt(0)).toSeq
-                // the previous batch's pipelined appends must be durable
-                // before the state reads below list the store
-                awaitStoreWrites()
-                val storeFps = readOrEmpty(sp, fpDir,
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("fp",
-                      org.apache.spark.sql.types.StringType)))) { df =>
-                  df.filter(inBuckets(col("pb"), pbs)).select(col("fp"))
-                }.withColumn("in_store", lit(1))
-                val w = org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("fp")).orderBy(col("doc_id"))
-                // unhinted store join: auto-broadcast while the fp set
-                // is small, planner-picked at scale — and the window
-                // exchange on fp already co-partitions the probe side
-                val classed = gatepass
-                  .join(storeFps, Seq("fp"), "left")
-                  .withColumn("rn_fp", row_number().over(w))
-                  // isNotNull, not === 1: a store miss leaves in_store
-                  // NULL, and NULL || false is NULL — which filter(!dup)
-                  // would silently DROP (losing the doc from admission)
-                  .withColumn("dup",
-                    col("in_store").isNotNull || col("rn_fp") > 1)
-                // budget state: admitted-so-far per language
-                val kept0 = readOrEmpty(sp, cntDir,
-                  org.apache.spark.sql.types.StructType(Seq(
-                    org.apache.spark.sql.types.StructField("lang",
-                      org.apache.spark.sql.types.StringType),
-                    longField("n")))) { df => df.select(col("lang"), col("n")) }
-                  .groupBy(col("lang")).agg(sum(col("n")).as("k0"))
-                val wLang = org.apache.spark.sql.expressions.Window
-                  .partitionBy(col("lang")).orderBy(col("doc_id"))
-                val quotaOf = expr(
-                  s"""($CurateBudget * CASE lang WHEN 'en' THEN 4000
-                      WHEN 'zh' THEN 2000 WHEN 'es' THEN 1500
-                      WHEN 'de' THEN 1500 ELSE 1000 END) div 10000""")
-                val admitted = classed.filter(!col("dup"))
-                  .withColumn("rk", row_number().over(wLang).cast("long"))
-                  .join(broadcast(kept0), Seq("lang"), "left")
-                  .withColumn("admit",
-                    coalesce(col("k0"), lit(0L)) + col("rk") <= quotaOf)
-                  .localCheckpoint() // consumed by spool + both stores
-                val verdictRows = scored
-                  .select(col("doc_id"), col("lang"), col("fp"),
-                    col("gate_fail"))
-                  .join(classed.select(col("doc_id"), col("dup")),
-                    Seq("doc_id"), "left")
-                  .join(admitted.select(col("doc_id"), col("admit")),
-                    Seq("doc_id"), "left")
-                  .select(col("doc_id"), col("lang"),
-                    when(col("gate_fail").isNotNull, col("gate_fail"))
-                      .when(col("dup"), "4_dup")
-                      .when(!col("admit"), "5_quota")
-                      .otherwise("6_kept").as("verdict"))
-                verdictRows.write.mode("append").parquet(spoolDir)
-                // state appends AFTER the reads: first occurrences enter
-                // the fp store (dups add nothing new), admitted counts
-                // extend the budget state. PIPELINED (storeWritePool
-                // above): `admitted` is checkpointed, so the writes read
-                // pinned partitions; awaited before the next batch's reads
-                pendingStoreWrite.set(storeWritePool.submit(new Runnable {
-                  override def run(): Unit = {
-                    // detach from the streaming query's inherited job group
-                    // or stop() cancels the final in-flight commit
-                    sp.sparkContext.setJobGroup("stream_curate_quota-storewrite",
-                      "stream_curate_quota pipelined state append")
-                    admitted.select(col("fp"), col("pb"))
-                      .repartition(col("pb"))
-                      .write.mode("append").partitionBy("pb").parquet(fpDir)
-                    admitted.filter(col("admit"))
-                      .groupBy(col("lang")).agg(count(lit(1)).as("n"))
-                      .coalesce(1)
-                      .write.mode("append").parquet(cntDir)
-                  }
-                }))
-              } finally {
-                sp.conf.set("spark.sql.shuffle.partitions", streamPartitions)
-                sp.conf.set("spark.sql.adaptive.enabled", streamAqe)
-              }
-              ()
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow()).start()
-        } {
-          spark.read.parquet(spoolDir)
-        }
-        // the FINAL batch's pipelined appends must land (or fail loudly)
-        // before pinThenClean sweeps the store away
-        awaitStoreWrites()
-        held
-        } finally {
-          scala.util.Try(awaitStoreWrites())
-          storeWritePool.shutdown()
-        }
+      val verdicts = storeStreamRun(spark, "stream_curate_quota", "scq",
+          docs.schema, stageDocRangeSlices(docs, 3),
+          StructType(Seq(longField("doc_id"), StructField("lang", StringType),
+            StructField("verdict", StringType)))) {
+        (batch, batchId, store, spoolDir) =>
+          val sp = batch.sparkSession
+          val toks = split(col("text"), " ")
+          val scored = batch.repartition(col("doc_id"))
+            .select(col("doc_id"), col("lang"),
+              md5(concat_ws(" ",
+                array_sort(array_distinct(toks))).cast("binary"))
+                .as("fp"),
+              size(toks).cast("long").as("n_tok"),
+              size(array_distinct(toks)).cast("long").as("n_dis"),
+              graft.Tables.occurrenceCount(toks,
+                Seq("the", "a", "and", "of", "in")).cast("long")
+                .as("n_stop"))
+            .withColumn("dis_bp",
+              floor(col("n_dis") * 10000 / col("n_tok")).cast("long"))
+            .withColumn("stop_bp",
+              floor(col("n_stop") * 10000 / col("n_tok")).cast("long"))
+            .withColumn("gate_fail",
+              when(col("n_tok") < 30, "1_short")
+                .when(col("dis_bp") < 3000, "2_repetitive")
+                .when(col("stop_bp") < 200 || col("stop_bp") > 2500,
+                  "3_stop_profile"))
+            .withColumn("pb", pmod(hash(col("fp")), lit(StoreBuckets)))
+            .localCheckpoint() // batch-sized; all branches below
+          val gatepass = scored.filter(col("gate_fail").isNull)
+          // touched fp buckets → static partition filter (O(1) rows)
+          val pbs = gatepass.select(col("pb")).distinct()
+            .collect().map(_.getInt(0)).toSeq
+          // store.dir: the state reads wait for the previous batch's
+          // appends; the row-local scoring above is what they overlap
+          val storeFps = readOrEmpty(sp, store.dir("fps"),
+              StructType(Seq(StructField("fp", StringType)))) { df =>
+            df.filter(inBuckets(col("pb"), pbs)).select(col("fp"))
+          }.withColumn("in_store", lit(1))
+          val w = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("fp")).orderBy(col("doc_id"))
+          // unhinted store join: auto-broadcast while the fp set
+          // is small, planner-picked at scale — and the window
+          // exchange on fp already co-partitions the probe side
+          val classed = gatepass
+            .join(storeFps, Seq("fp"), "left")
+            .withColumn("rn_fp", row_number().over(w))
+            // isNotNull, not === 1: a store miss leaves in_store
+            // NULL, and NULL || false is NULL — which filter(!dup)
+            // would silently DROP (losing the doc from admission)
+            .withColumn("dup",
+              col("in_store").isNotNull || col("rn_fp") > 1)
+          // budget state: admitted-so-far per language
+          val kept0 = readOrEmpty(sp, store.dir("counts"),
+              StructType(Seq(StructField("lang", StringType),
+                longField("n")))) { df => df.select(col("lang"), col("n")) }
+            .groupBy(col("lang")).agg(sum(col("n")).as("k0"))
+          val wLang = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("lang")).orderBy(col("doc_id"))
+          val quotaOf = expr(
+            s"""($CurateBudget * CASE lang WHEN 'en' THEN 4000
+                WHEN 'zh' THEN 2000 WHEN 'es' THEN 1500
+                WHEN 'de' THEN 1500 ELSE 1000 END) div 10000""")
+          val admitted = classed.filter(!col("dup"))
+            .withColumn("rk", row_number().over(wLang).cast("long"))
+            .join(broadcast(kept0), Seq("lang"), "left")
+            .withColumn("admit",
+              coalesce(col("k0"), lit(0L)) + col("rk") <= quotaOf)
+            .localCheckpoint() // consumed by spool + both stores
+          scored
+            .select(col("doc_id"), col("lang"), col("fp"), col("gate_fail"))
+            .join(classed.select(col("doc_id"), col("dup")),
+              Seq("doc_id"), "left")
+            .join(admitted.select(col("doc_id"), col("admit")),
+              Seq("doc_id"), "left")
+            .select(col("doc_id"), col("lang"),
+              when(col("gate_fail").isNotNull, col("gate_fail"))
+                .when(col("dup"), "4_dup")
+                .when(!col("admit"), "5_quota")
+                .otherwise("6_kept").as("verdict"))
+            .write.mode("append").parquet(spoolDir)
+          // state appends AFTER the reads: first occurrences enter the fp
+          // store (dups add nothing new), admitted counts extend the
+          // budget state
+          store.submit(sp, batchId) { at =>
+            appendStore(admitted.select(col("fp"), col("pb")), at("fps"),
+              None, Seq("pb"), store.partitions)
+            admitted.filter(col("admit"))
+              .groupBy(col("lang")).agg(count(lit(1)).as("n"))
+              .coalesce(1)
+              .write.mode("append").parquet(at("counts"))
+          }
       }
       verdicts.groupBy(col("lang"), col("verdict"))
         .agg(count(lit(1)).as("n_docs"), sum(col("doc_id")).as("doc_id_sum"))

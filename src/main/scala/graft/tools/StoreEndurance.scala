@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Many-batch ENDURANCE axis for the neardup store family (r13 verdict top
@@ -30,14 +29,10 @@ object StoreEndurance {
             else graft.ops.StreamingQueries.TtlWindowBatches
     require(mode == "ttl" || mode == "compact" || mode == "embttl",
       s"unknown mode $mode")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the shared session recipe: its replays reuse generated classes
+    // instead of recompiling them per stream run
+    val spark = graft.LocalSession.create(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.range(1000).selectExpr("sum(id)").collect()
     val S = graft.ops.StreamingQueries
     val stats = scala.collection.mutable.ArrayBuffer.empty[S.BatchStats]

@@ -29,6 +29,18 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  /** Names under the JVM temp dir that start with any of `prefixes`: a
+    * store run's per-run scaffolding (slice replay, store, output spool,
+    * checkpoint), diffed before/after a run to catch leaks.
+    */
+  private def scaffolding(prefixes: String*): Set[String] =
+    Option(new java.io.File(System.getProperty("java.io.tmpdir")).listFiles())
+      .getOrElse(Array.empty).map(_.getName)
+      .filter(n => prefixes.exists(n.startsWith)).toSet
+
+  /** The smallest fixture scale, shared by the store-engine cases. */
+  private val smallSf = "/root/testdata/sf0.001"
+
   test("watermarked tumbling counts finalize windows in append mode") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -460,20 +472,15 @@ class StreamingSpec extends AnyFunSuite {
     // and compare as sets — and require that the run really was
     // incremental (≥2 data batches), or the equality would be trivial.
     val sfDir = "/root/testdata/sf0.001"
-    def scaffolding(): Set[String] = {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      Option(tmp.listFiles()).getOrElse(Array.empty).map(_.getName)
-        .filter(n => n.startsWith("graft-ndv-") ||
-          n.startsWith("graft-docslice-")).toSet
-    }
-    val dirsBefore = scaffolding()
+    val prefixes = Seq("graft-ndv-", "graft-docslice-")
+    val dirsBefore = scaffolding(prefixes: _*)
     val held = graft.ops.StreamingQueries.streamNeardupVerified
       .fn(spark, sfDir)
       .select(org.apache.spark.sql.functions.col("doc_id"))
       .collect().map(_.getLong(0)).toSet
     // r11 ADVICE low: the run must clean up its five per-run temp dirs
     // (slice stage+replay, signature store, held spool, checkpoint)
-    val leftover = scaffolding() -- dirsBefore
+    val leftover = scaffolding(prefixes: _*) -- dirsBefore
     assert(leftover.isEmpty,
       s"verified gate leaked temp scaffolding: $leftover")
     assert(graft.ops.StreamingQueries
@@ -689,17 +696,12 @@ class StreamingSpec extends AnyFunSuite {
     // incremental, and the interleave must actually invert id order
     // somewhere or the arrival semantics are untested
     val sfDir = "/root/testdata/sf0.001"
-    def scaffolding(): Set[String] = {
-      val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
-      Option(tmp.listFiles()).getOrElse(Array.empty).map(_.getName)
-        .filter(n => n.startsWith("graft-emb-") ||
-          n.startsWith("graft-docslice-")).toSet
-    }
-    val dirsBefore = scaffolding()
+    val prefixes = Seq("graft-emb-", "graft-docslice-")
+    val dirsBefore = scaffolding(prefixes: _*)
     val held = graft.ops.StreamingQueries.streamEmbdupVerified
       .fn(spark, sfDir)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val leftover = scaffolding() -- dirsBefore
+    val leftover = scaffolding(prefixes: _*) -- dirsBefore
     assert(leftover.isEmpty, s"embdup stream leaked temp scaffolding: $leftover")
     assert(graft.ops.StreamingQueries
       .lastBatchCounts("stream_embdup_verified") >= 2,
@@ -720,6 +722,103 @@ class StreamingSpec extends AnyFunSuite {
       "interleave never inverted id order — arrival semantics untested")
     assert(held === expected,
       s"held set diverged from the arrival rule: extra=${held -- expected}, missed=${expected -- held}")
+  }
+
+  test("curate quota stream: every doc gets one verdict, no temp scaffolding left") {
+    val sfDir = smallSf
+    val prefixes = Seq("graft-scq-", "graft-docslice-")
+    val dirsBefore = scaffolding(prefixes: _*)
+    val rows = graft.ops.StreamingQueries.streamCurateQuota.fn(spark, sfDir)
+      .collect()
+    val leftover = scaffolding(prefixes: _*) -- dirsBefore
+    assert(leftover.isEmpty, s"curate stream leaked temp scaffolding: $leftover")
+    assert(graft.ops.StreamingQueries
+      .lastBatchCounts("stream_curate_quota") >= 2,
+      "curate gate ran as a single batch — cross-batch state not exercised")
+    val nDocs = graft.Tables.load(spark, sfDir, "documents").count()
+    assert(rows.map(_.getAs[Long]("n_docs")).sum === nDocs)
+    // the budget binds and the fp store catches cross-batch dups
+    val verdicts = rows.map(_.getAs[String]("verdict")).toSet
+    assert(Set("4_dup", "5_quota", "6_kept").subsetOf(verdicts), s"$verdicts")
+  }
+
+  test("pipelined store: a failed batch-0 write fails the run with its cause, leaves no dirs, stops the writer") {
+    import org.apache.spark.sql.functions._
+    val S = graft.ops.StreamingQueries
+    val docs = graft.Tables.load(spark, smallSf, "documents")
+      .select(col("doc_id"), col("lang"), col("text"))
+    val incoming = S.stageDocModSlices(docs, 3)
+    val before = scaffolding("graft-specfail-")
+    val boom = new RuntimeException("injected store-write failure")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val err = intercept[Exception] {
+      S.storeStreamRun(spark, "spec_storefail", "specfail", docs.schema,
+          incoming, org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("doc_id",
+              org.apache.spark.sql.types.LongType)))) {
+        (batch, batchId, store, outDir) =>
+          seen += batchId
+          // a store read waits for the previous batch's write: batch 1
+          // must fail here, before its own write is submitted
+          new java.io.File(store.dir("t")).exists()
+          batch.select(col("doc_id")).write.mode("append").parquet(outDir)
+          store.submit(batch.sparkSession, batchId) { at =>
+            if (batchId == 0) throw boom
+            batch.sparkSession.range(1).write.mode("append").parquet(at("t"))
+          }
+      }.count()
+    }
+    val causes = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).toSeq
+    assert(causes.contains(boom), s"failure lost its cause: $causes")
+    assert(seen.toSeq === Seq(0L, 1L),
+      s"the failed write did not stop the run at batch 1's read: $seen")
+    assert(!new java.io.File(incoming).exists(), "slice replay dir left")
+    assert(scaffolding("graft-specfail-") -- before === Set.empty[String])
+    val writers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName == "spec_storefail-storewrite" && t.isAlive)
+    assert(writers.isEmpty, "the writer thread outlived its run")
+  }
+
+  test("pipelined store: submit keeps an un-awaited failure; batch ids must not resume") {
+    val root = java.nio.file.Files.createTempDirectory("graft-specstore")
+      .toString
+    val store = new graft.ops.PipelinedStore("spec_store", root, 4)
+    try {
+      store.begin(0L)
+      val boom = new RuntimeException("first write failed")
+      store.submit(spark, 0L)(_ => throw boom)
+      // a newer submit must surface the older failure, not replace it
+      val err = intercept[IllegalStateException] {
+        store.submit(spark, 0L)(_ => ())
+      }
+      assert(err.getCause eq boom)
+      store.await() // surfaced once; the store is usable again
+      // a run resumed from a checkpoint would start past batch 0
+      intercept[IllegalArgumentException](store.begin(2L))
+      store.begin(1L)
+    } finally {
+      store.close()
+      graft.Tables.deleteTree(root)
+    }
+  }
+
+  test("shared slice memo: ttl then late leave the staged dir in place and both read it") {
+    val S = graft.ops.StreamingQueries
+    val sfDir = smallSf
+    S.streamNeardupTtl.fn(spark, sfDir).collect()
+    val shared = S.sharedSliceDirs.asScala.toSet
+    assert(shared.nonEmpty && shared.forall(new java.io.File(_).isDirectory),
+      s"ttl run did not leave its shared slice dir: $shared")
+    val late = S.streamNeardupLate.fn(spark, sfDir).collect()
+    assert(S.sharedSliceDirs.asScala.toSet === shared,
+      "late staged its own slices instead of reading the memo")
+    assert(shared.forall(d =>
+        new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet")) >= 6),
+      "a store run deleted (part of) the shared slice dir")
+    assert(S.lastBatchCounts("stream_neardup_late") === 6,
+      "late did not replay all six shared slices")
+    assert(late.map(_.getAs[Long]("n_held")).sum > 0L)
   }
 
   test("store engines: join regimes are plan-invariant; -1 threshold parses negative") {
