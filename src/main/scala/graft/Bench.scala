@@ -20,7 +20,8 @@ object Bench {
     // page loader, not the engine; the timed pass below runs on a heap whose
     // pages are already resident and measures steady-state query speed.
     SparkEntry.queries.foreach { case (_, fn) =>
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => () }
+      try SparkEntry.runToCompletion(fn(spark, sfDir))
+      catch { case _: Throwable => () }
     }
     // Two timed passes, per-query minimum: this host stalls tens of seconds
     // at random on first-touch page provisioning (see BASELINE.md); the min
@@ -31,11 +32,19 @@ object Bench {
     // headline total IMPROVE; failures are excluded from every total and
     // reported by name instead, so a red run can never bench faster than a
     // green one.
-    def timedPass(): Map[String, Option[Double]] = SparkEntry.queries.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
-      name -> (if (ok) Some((System.nanoTime() - t0) / 1e9) else None)
-    }
+    // Each run also keeps the micro-batch exec seconds of every stream it
+    // ran (lastExecSec, emptied before the run; None when it ran none), so
+    // a query's exec split comes from the same run as its wall.
+    def timedPass(): Map[String, Option[(Double, Option[Double])]] =
+      SparkEntry.queries.map { case (name, fn) =>
+        ops.StreamingQueries.lastExecSec = Map.empty
+        val t0 = System.nanoTime()
+        val ok = try { SparkEntry.runToCompletion(fn(spark, sfDir)); true }
+          catch { case _: Throwable => false }
+        val execs = ops.StreamingQueries.lastExecSec.values
+        name -> (if (ok) Some(((System.nanoTime() - t0) / 1e9,
+          if (execs.isEmpty) None else Some(execs.sum))) else None)
+      }
     // Pass count is env-tunable (SPARK_GRAFT_BENCH_PASSES, default 2): the
     // driver host shows broad ±0.2-0.4 s per-query drift that two passes
     // don't fully absorb; a steady-state investigation can raise this
@@ -49,9 +58,11 @@ object Bench {
     val passes = Seq.fill(nPasses)(timedPass())
     val failed = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => passes.exists(_(n).isEmpty))
-    val results = SparkEntry.queries.keys.toSeq
+    // per query: the (wall, exec) of its fastest pass
+    val runs = SparkEntry.queries.keys.toSeq
       .filterNot(failed.contains)
-      .map(n => n -> passes.map(_(n).get).min).toMap
+      .map(n => n -> passes.map(_(n).get).minBy(_._1)).toMap
+    val results = runs.map { case (n, (wall, _)) => n -> wall }
     // 3-decimal rounding keeps the full per-query line well under the
     // driver's stdout tail window (r1-r3 all had "parsed": null because the
     // ~6 KB full-precision line got its head clipped by that window).
@@ -90,22 +101,15 @@ object Bench {
     // "Streaming" = recorded a triggerExecution split (lastExecSec), which
     // also catches non-stream_-prefixed stream drivers like snapshot_asof —
     // keeping streaming_total and streaming_exec_total over the SAME set.
-    val execKeys = ops.StreamingQueries.lastExecSec.keySet
-      .map(_.stripSuffix("_sink"))
     val (streamRes, batchRes) = results.partition { case (n, _) =>
-      n.startsWith("stream_") || execKeys.contains(n) }
+      n.startsWith("stream_") || runs(n)._2.isDefined }
     val total = if (batchRes.nonEmpty) batchRes.values.sum else 0.0
     val streamTotal = if (streamRes.nonEmpty) streamRes.values.sum else 0.0
-    // Micro-batch execution seconds (sum of triggerExecution durations from
-    // the last run of each streaming query): separates real processing time
-    // from the fixed AvailableNow bootstrap included in streaming_total.
-    // Exclude queries in `failed`: a stream that succeeded only in the
-    // untimed warm pass leaves its warm exec seconds in lastExecSec, and
-    // summing them would let a red run bench like a green one — the exact
-    // invariant the failure-honest rewrite established.
-    val streamExecTotal = ops.StreamingQueries.lastExecSec
-      .filterNot { case (k, _) => failed.contains(k.stripSuffix("_sink")) }
-      .values.sum
+    // Micro-batch execution seconds (sum of triggerExecution durations of
+    // the same run as each streaming query's minimum wall): separates real
+    // processing time from the fixed AvailableNow bootstrap included in
+    // streaming_total. Failed queries have no run, so no exec seconds.
+    val streamExecTotal = runs.values.flatMap(_._2).sum
     // Self-adjudicating host-drift controls (r10 burned real effort
     // hand-running TimeQuery controls to separate a 25-30% host window from
     // code changes). Six stable queries spanning profiles — DPP scan,

@@ -10,6 +10,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** Runs `df` to completion and discards its rows: the one way the timing
+    * and profiling mains run a registry query. Every output column is
+    * evaluated. `count()` is not a run: it prunes the plan to no columns,
+    * so a projection no row count needs (a UDF, a verify step) never
+    * executes, and an order-by's sort is dropped.
+    */
+  def runToCompletion(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
   /** Every registered query (implementation + oracle). */
   def registry: Seq[QueryDef] =
     ops.ParityQueries.all ++ ops.RelationalQueries.all ++

@@ -41,7 +41,7 @@ object VectorFunctions {
     * cheap to inline in codegen.
     *
     * The plane·dim cross term and the mod-67 outer ring are load-bearing
-    * (EmbBandAB finding): the original `((5p + 7j + 3) mod 11) − 5` is
+    * (band-width A/B finding, BASELINE.md): the original `((5p + 7j + 3) mod 11) − 5` is
     * PERIODIC IN p WITH PERIOD 11 — planes 11+ are verbatim copies of
     * planes 0–10, so every sign-LSH band beyond the first 11 bits tested
     * the SAME hyperplane set: the 2×8 registry banding paid 2× candidate

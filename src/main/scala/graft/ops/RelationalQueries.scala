@@ -735,17 +735,15 @@ object RelationalQueries {
 
   /** The SAME class of interval join written as the NATURAL one-sided theta
     * predicate — `purchase in the 5 minutes before each error` — with the
-    * bucketization left entirely to [[graft.plans.RewriteIntervalJoin]]
-    * (registered on the session at call time, the way a production session
-    * enables it via extensions). This puts the optimizer RULE itself in the
-    * driver's hash gate: if the rule stopped firing, PlanShapeSpec fails on
-    * the nested loop; if it rewrote incorrectly, this oracle catches it.
+    * bucketization left entirely to [[graft.plans.RewriteIntervalJoin]],
+    * which every [[graft.LocalSession]] installs through
+    * [[graft.plans.GraftExtensions]]. This puts the optimizer RULE itself in
+    * the driver's hash gate: if the rule stopped firing, PlanShapeSpec fails
+    * on the nested loop; if it rewrote incorrectly, this oracle catches it.
     */
   val joinRangeRule = QueryDef(
     "join_range_rule",
     (spark, dir) => {
-      import graft.plans.{RewriteIntervalJoin, SessionRules}
-      SessionRules.registerOptimization(spark, RewriteIntervalJoin)
       val ev = load(spark, dir, "events")
       val err = ev.filter(col("event_type") === "error")
         .select(col("event_id").as("e_id"), unix_millis(col("ts")).as("e_ms"))

@@ -1010,7 +1010,7 @@ object StreamingQueries {
       // Spread the raw docs across the stream partitions BEFORE the 64-perm
       // band projection: the single-file fixture scan is one task, and the
       // projection is the heavy step (audit: 0.96 s 1-task stage; A/B'd
-      // warm at sf0.1 with tools/Repeat). Per-micro-batch bounded — the
+      // warm at sf0.1 with tools/TimeQuery). Per-micro-batch bounded — the
       // text shuffle is the same order as the band-row shuffle the gate
       // already does; on a pre-split production source it is redundant but
       // proportionally small, and a multi-file source arrives pre-spread.

@@ -445,7 +445,7 @@ object TextQueries2 {
     "text_bpe_step",
     (spark, dir) => {
       // NOT repartitioned before tokenize, by measurement (r9 A/B,
-      // tools/Repeat at sf0.1: 0.40 s as-is vs 0.51 s with a pre-explode
+      // tools/TimeQuery at sf0.1: 0.40 s as-is vs 0.51 s with a pre-explode
       // repartition): the word-frequency collapse's map-side combine makes
       // the scan-task tokenize cheaper than shuffling the raw text.
       val wf = bpeWordFreqs(spark, dir)

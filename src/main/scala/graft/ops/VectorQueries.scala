@@ -143,10 +143,9 @@ object VectorQueries {
     * .autoBandBits]] precedent), and band COUNT buys back the recall that
     * widening costs (each extra band is one more independent chance to
     * collide, at volume linear in bands). Since r15 the WIDTH knob is
-    * wired to the corpus count (the r14 verdict's top ask — EmbBandAB
-    * measured the static 8×2 arm quadratic at 100×); both knobs'
-    * cost/recall trades are measured at 10×/100× by `tools.EmbBandAB`
-    * (BASELINE.md).
+    * wired to the corpus count (the r14 verdict's top ask — the static
+    * 8×2 arm measured quadratic at 100×); both knobs' cost/recall trades
+    * at 10×/100× are in BASELINE.md, "Embedding band-width knobs measured at 10×/100×".
     */
   /** THE registry banding config — one site for both engines AND the
     * sig width: the streaming gate once hardcoded signLsh(v, 16) next to
@@ -160,7 +159,7 @@ object VectorQueries {
     * The WIDTH is no longer a static 8: it AUTO-SIZES from the corpus
     * count ([[autoEmbBits]]) — the `DedupQueries.autoBandBits` /
     * `dedup_semantic` auto-k precedent, promoted to the embedding family
-    * after `tools.EmbBandAB` measured the fixed 8×2 arm's candidate
+    * after the band-width A/B (BASELINE.md) measured the fixed 8×2 arm's candidate
     * volume growing ~quadratically with corpus (178.7 M pre-distinct
     * pairs at 100×, 0.10×/row stream wall) while +4 width bits cut it
     * ~15×. Registry queries derive bits from one count job (parquet
@@ -179,7 +178,7 @@ object VectorQueries {
     * whose rounding could split the engines at a power-of-two boundary.
     * Keeps expected bucket occupancy per band ≤ ~1 until the 14-bit
     * clamp; beyond 16 K vectors occupancy grows again and the band
-    * COUNT knob takes over. MEASURED past the clamp (r16 EmbBandAB,
+    * COUNT knob takes over. MEASURED past the clamp (r16 band-width A/B,
     * planted 16 K/33 K-vector cluster corpora): at fixed auto(14)×2 the
     * candidate-volume curve re-steepens (122 K → 295 K pairs for 2×
     * vectors, ×2.41) with recall pinned ~0.645; widening further
@@ -243,8 +242,8 @@ object VectorQueries {
   /** Distinct band-candidate pairs (a_id < b_id, ids ONLY) at the given
     * (width, bands) — the volume the knobs control, split out so
     * `EmbBandSpec` can gate the candidate stage the verify stage then
-    * prunes (tools.EmbBandAB counts volume analytically from bucket
-    * occupancy instead — no pair join at all).
+    * prunes (the band-width A/B in BASELINE.md counted volume
+    * analytically from bucket occupancy instead — no pair join at all).
     */
   private[graft] def embBandCandidates(
       spark: org.apache.spark.sql.SparkSession, dir: String,
@@ -270,7 +269,7 @@ object VectorQueries {
     * long-tracked bench number and poisoning round-over-round drift
     * adjudication. The spec recomputes at sf0.001, a ~1 s cost.
     *
-    * VERIFY-THEN-DISTINCT (EmbBandAB finding, two dead ends deep): the
+    * VERIFY-THEN-DISTINCT (band-width A/B finding, two dead ends deep): the
     * candidate×vector intermediate must never be exchanged. Attaching
     * vectors AFTER a distinct on id pairs needs a join per side, and ANY
     * join strategy repartitions the pair frame — by then it carries a

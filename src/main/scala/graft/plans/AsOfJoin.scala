@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, Lo
   * DataFrame API genuinely lacks (SURVEY §2.4 "range/as-of"; the engine also
   * ships the union+window formulation in `join_asof` — this is the
   * whole-operator Catalyst route: LogicalPlan + Strategy + physical exec,
-  * registered at runtime via `spark.experimental.extraStrategies`).
+  * installed in every session by [[GraftExtensions]]).
   *
   * Semantics: for each left row, the single right row with the same key and
   * the greatest time STRICTLY less than the left time; ties on right time
@@ -261,10 +261,12 @@ object AsOfJoinStrategy extends SparkStrategy {
 
 object AsOfJoinOps {
   /** DataFrame-level entry: backward as-of inner join of `left` to `right`
-    * on any orderable key/time columns. Registers the planner strategy on the session
-    * (idempotent). `tolerance` (same unit as the time columns) drops matches
-    * older than `leftTime − tolerance` — pandas merge_asof's staleness
-    * bound, evaluated inside the merge pass at zero extra cost.
+    * on any orderable key/time columns. The session plans the node with
+    * [[AsOfJoinStrategy]], which [[GraftExtensions]] installs (as
+    * [[graft.LocalSession]] does). `tolerance` (same unit as the time
+    * columns) drops matches older than `leftTime − tolerance` — pandas
+    * merge_asof's staleness bound, evaluated inside the merge pass at zero
+    * extra cost.
     * `leftOuter = true` keeps unmatched left rows with a null-extended right
     * side (merge_asof's default join shape; inner is this API's default).
     */
@@ -273,8 +275,6 @@ object AsOfJoinOps {
       leftTime: Column, rightTime: Column, rightTiebreak: Column,
       tolerance: Option[Long] = None,
       leftOuter: Boolean = false): DataFrame = {
-    SessionRules.registerStrategy(spark, AsOfJoinStrategy)
-    SessionRules.registerOptimization(spark, PushLeftFilterThroughAsOfJoin)
     GraftSqlBridge.ofRows(spark, AsOfJoin(
       GraftSqlBridge.analyzedPlan(leftDf), GraftSqlBridge.analyzedPlan(rightDf),
       GraftSqlBridge.expression(leftKey), GraftSqlBridge.expression(rightKey),

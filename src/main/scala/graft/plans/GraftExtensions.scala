@@ -5,9 +5,10 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.RollingHash
 
-/** Session extension point: registers the engine's custom Catalyst functions
-  * for SQL use. Wire with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+/** The engine's one rule-injection path: the custom Catalyst functions for
+  * SQL use (`rolling_hash`, `cosine_similarity`, `ngrams`), the as-of join
+  * planner strategy and the two optimizer rules. [[graft.LocalSession]]
+  * builds every session with it; an outside session can take it with
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * key, AQE-skew-handled), and re-checks the ORIGINAL predicate verbatim as
   * an exact post-filter — so the rewrite can never widen the result.
   * (`join_range_interval` states this rewrite by hand; the rule generalizes
-  * it to any query through the extensions-enabled session.)
+  * it to any query in every [[graft.LocalSession]].)
   *
   * Safety: fires only on INNER joins whose condition has no equi-conjunct
   * (those already hash-join). Bucket indexes are computed as

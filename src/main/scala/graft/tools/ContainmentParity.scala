@@ -1,29 +1,22 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-
-/** One-shot cross-engine parity check for the AUTO-SIZED containment band
-  * width ([[graft.ops.DedupQueries.autoBandBits]]): the driver's sf0.01
-  * gate only ever exercises the ≤1024-doc (10-bit) branch, so this main
-  * dumps the Spark side of the WIDE branch — containmentPairs over the
-  * full documents table (5000 docs at sf0.1 → 15-bit) — for a DuckDB
-  * compare against the same dynamic-width oracle SQL with the doc filter
-  * removed (see BASELINE.md "containment auto-sizing parity").
+/** Cross-engine parity check for the WIDE branch of the auto-sized
+  * containment band width ([[graft.ops.DedupQueries.autoBandBits]]).
+  * `dedup_containment` filters `doc_id % 10 = 0`, so even sf0.1 stays at
+  * or under 1024 docs and takes the 10-bit branch, and no spec covers the
+  * 15-bit branch: this main is its only route to DuckDB parity. It dumps
+  * containmentPairs over the full documents table (5000 docs at sf0.1 →
+  * 15-bit) for a compare against the same dynamic-width oracle SQL with the
+  * doc filter removed (BASELINE.md, "Scale evidence (r6): auto-sized
+  * containment + the streaming axis": 73 685 pairs bit-identical).
   *
   * Usage: runMain graft.tools.ContainmentParity <sfDir> <outDir>
   */
 object ContainmentParity {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession.create(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val n = docs.count()
     val bits = graft.ops.DedupQueries.autoBandBits(n)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan auditor: dumps the formatted physical plan of each registry query so
   * scan pruning (ReadSchema/PushedFilters), join strategies, and
   * whole-stage-codegen spans can be reviewed per round.
@@ -11,13 +9,7 @@ object ExplainAll {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).toSet
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.create("4")
     for (q <- graft.SparkEntry.registry if only.isEmpty || only(q.name)) {
       println(s"\n===================== ${q.name} =====================")
       try q.fn(spark, sfDir).explain("formatted")

@@ -78,7 +78,8 @@ object JobProfile {
     val registry = graft.SparkEntry.queries
     names.foreach { name =>
       val fn = registry.getOrElse(name, sys.error(s"unknown query: $name"))
-      fn(spark, sfDir).count() // warm: codegen + parquet footers
+      // warm: codegen + parquet footers
+      graft.SparkEntry.runToCompletion(fn(spark, sfDir))
       jobs.synchronized { jobs.clear(); stageToJob.clear() }
       spark.sparkContext.addSparkListener(listener)
       val t0 = System.nanoTime()

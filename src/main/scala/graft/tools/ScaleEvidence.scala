@@ -226,14 +226,8 @@ object ScaleEvidence {
       "stream_sessionize", "stream_join_outer")
     val allTargets = if (args.length > 2) args.drop(2).toSeq else defaults
     val (streamTargets, targets) = allTargets.partition(_.startsWith("stream_"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.create(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     // Factor marker: an existence-only guard silently reuses an OLD-factor
     // corpus while perRow divides by the NEW factor (every figure ~k× too
@@ -301,14 +295,16 @@ object ScaleEvidence {
     val registry = graft.SparkEntry.queries
     def time(name: String, dir: String): Double = {
       val fn = registry(name)
-      fn(spark, dir).count() // warm: codegen + page faults outside the timer
+      // warm: codegen + page faults outside the timer
+      graft.SparkEntry.runToCompletion(fn(spark, dir))
       def once(): Double = {
         // drop plan-matched InMemoryRelations between runs: queries that
         // .cache() an intermediate (minhash signatures) would otherwise be
         // timed on a cache hit, excluding exactly the linear compute this
         // tool exists to measure
         spark.catalog.clearCache()
-        val t0 = System.nanoTime(); fn(spark, dir).count()
+        val t0 = System.nanoTime()
+        graft.SparkEntry.runToCompletion(fn(spark, dir))
         (System.nanoTime() - t0) / 1e9
       }
       math.min(once(), once())
@@ -328,7 +324,8 @@ object ScaleEvidence {
       // and _exec (micro-batch triggerExecution only) — state-store growth
       // shows in _exec; bootstrap is scale-invariant fixed cost.
       def once(dir: String): (Double, Double) = {
-        val t0 = System.nanoTime(); registry(q)(spark, dir).count()
+        val t0 = System.nanoTime()
+        graft.SparkEntry.runToCompletion(registry(q)(spark, dir))
         val wall = (System.nanoTime() - t0) / 1e9
         // the exec map is keyed by the memory-sink name ("<query>_sink");
         // a MISS must be loud — falling back to wall silently reports
@@ -362,9 +359,10 @@ object ScaleEvidence {
       // growth. This extra row is the COUNTERFACTUAL — fixed 10-bit at both
       // scales — quantifying what auto-sizing saves (r5 measured 5.2×).
       def contain(dir: String, bits: Int): Double = {
-        def run() = graft.ops.DedupQueries.containmentPairs(
-          graft.Tables.load(spark, dir, "documents")
-            .filter(col("doc_id") % 10 === 0), bits).count()
+        def run() = graft.SparkEntry.runToCompletion(
+          graft.ops.DedupQueries.containmentPairs(
+            graft.Tables.load(spark, dir, "documents")
+              .filter(col("doc_id") % 10 === 0), bits))
         run()
         def once(): Double = {
           spark.catalog.clearCache()

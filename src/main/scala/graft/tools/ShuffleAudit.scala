@@ -2,7 +2,6 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Shuffle auditor: runs each registry query and reports the bytes/records
   * actually shuffled and spilled (task-metric truth, not plan guesses).
@@ -48,20 +47,14 @@ object ShuffleAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val only = args.drop(1).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession.create(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.sparkContext.addSparkListener(Listener)
     val rows = for (q <- graft.SparkEntry.registry
         if only.isEmpty || only(q.name)) yield {
       shuffleWrite.set(0); shuffleRecords.set(0); spill.set(0)
       stageAgg.clear()
-      val ok = try { q.fn(spark, sfDir).count(); true }
+      val ok = try { graft.SparkEntry.runToCompletion(q.fn(spark, sfDir)); true }
         catch { case _: Throwable => false }
       // listener events are queued; drain before reading the counters
       org.apache.spark.GraftListenerBridge.drainListenerBus(spark.sparkContext)

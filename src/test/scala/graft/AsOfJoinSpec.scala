@@ -93,8 +93,17 @@ class AsOfJoinSpec extends AnyFunSuite {
   test("left-only filters push below the as-of join; right-side filters stay above") {
     import graft.plans.{AsOfJoin, PushLeftFilterThroughAsOfJoin}
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter}
-    val l = Seq((1L, 7L, 100L), (2L, 7L, 200L)).toDF("lid", "lkey", "ltime")
-    val r = Seq((10L, 7L, 50L), (11L, 7L, 150L)).toDF("rid", "rkey", "rtime")
+    // RDD-backed inputs: the rule runs in the operator-optimization batch,
+    // and a filter pushed onto a LocalRelation is evaluated away by
+    // ConvertToLocalRelation, leaving no Filter node to find
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructType}
+    def rdd(rows: Seq[(Long, Long, Long)], cols: String*) =
+      spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(t => Row(t._1, t._2, t._3))),
+        cols.foldLeft(new StructType)(_.add(_, LongType)))
+    val l = rdd(Seq((1L, 7L, 100L), (2L, 7L, 200L)), "lid", "lkey", "ltime")
+    val r = rdd(Seq((10L, 7L, 50L), (11L, 7L, 150L)), "rid", "rkey", "rtime")
     val joined = AsOfJoinOps.asofJoin(spark, l, r,
       l("lkey"), r("rkey"), l("ltime"), r("rtime"), r("rid"))
     val filtered = joined.filter($"lid" === 2L && $"rid" > 5L)

@@ -109,11 +109,7 @@ class DedupSpec extends AnyFunSuite {
       acc
     }
     assert(df.collect().map(_.getLong(0)).toSeq === Seq("abc", "", "Zürich ∆").map(ref))
-    // SQL registration through extensions
-    val ext = new graft.plans.GraftExtensions
-    spark.sessionState.functionRegistry
-      .createOrReplaceTempFunction("rolling_hash",
-        es => graft.functions.RollingHash(es.head), "scala_udf")
+    // SQL registration: LocalSession's GraftExtensions
     val viaSql = spark.sql("SELECT rolling_hash('abc') AS h").collect().head.getLong(0)
     assert(viaSql === ref("abc"))
   }

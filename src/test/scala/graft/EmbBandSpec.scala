@@ -7,8 +7,8 @@ import graft.functions.VectorFunctions.{cosine, toDoubleArray}
 import graft.ops.VectorQueries
 
 /** Pins the embedding band-width knob ([[VectorQueries.embBandPairs]]
-  * bitsPerBand — the production scale lever measured at 100× by
-  * `tools.EmbBandAB`): at ANY width the verified pair set must stay an
+  * bitsPerBand — the production scale lever measured at 100×, BASELINE.md
+  * "Embedding band-width knobs measured at 10×/100×"): at ANY width the verified pair set must stay an
   * exact subset of the all-pairs cosine truth (the verify stage is exact,
   * so widening bands may only LOSE pairs, never invent them), and widening
   * must actually shrink the candidate stage (the entire point of the
@@ -83,7 +83,7 @@ class EmbBandSpec extends AnyFunSuite {
       val found = pairSet(VectorQueries.embVerifiedPairs(spark, dir, bits))
         .intersect(truth)
       val recall = found.size.toDouble / truth.size
-      // measured 0.795 at auto(9)x2 on this exact corpus (EmbBandAB r15);
+      // measured 0.795 at auto(9)x2 on this exact corpus (band-width A/B r15, BASELINE.md);
       // floor at 0.6 leaves host-independent margin while still failing
       // loudly on any structural break
       assert(recall >= 0.6,
@@ -95,7 +95,7 @@ class EmbBandSpec extends AnyFunSuite {
     // provable, not just likely: signLsh's plane p depends only on (p, j),
     // so a 48-bit sig's low 24 bits equal the 24-bit sig, and 12x4's
     // bands 0-1 are exactly 12x2's bands — extra bands union in more
-    // collision chances (the recall-buyback knob EmbBandAB measures)
+    // collision chances (the recall-buyback knob BASELINE.md measures at 10×/100×)
     val two = pairSet(VectorQueries.embVerifiedPairs(spark, sfDir, 12, 2))
     val four = pairSet(VectorQueries.embVerifiedPairs(spark, sfDir, 12, 4))
     val lost = two -- four

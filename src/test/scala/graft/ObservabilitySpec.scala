@@ -55,4 +55,14 @@ class ObservabilitySpec extends AnyFunSuite {
       assert(calls.get() > 0, "listener never saw the execution")
     } finally spark.listenerManager.unregister(listener)
   }
+
+  test("runToCompletion evaluates every output column; count() does not") {
+    val acc = spark.sparkContext.longAccumulator("udf_calls")
+    val bump = udf { (x: Long) => acc.add(1L); x }
+    val df = spark.range(0, 100, 1, 4).select(bump(col("id")).as("v"))
+    assert(df.count() === 100L)
+    assert(acc.value === 0L, "count() pruned the column, so the UDF never ran")
+    SparkEntry.runToCompletion(df)
+    assert(acc.value === 100L)
+  }
 }

@@ -82,6 +82,19 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  /** The gated queries [[graft.plans.RewriteIntervalJoin]] rewrites at
+    * sf0.001. LocalSession installs the rule for every plan of every
+    * session, so a query that newly matches its band shape shows up here
+    * and must be checked against its oracle before it joins the list.
+    */
+  private val bucketRewritten = Set("join_range_rule")
+
+  test("RewriteIntervalJoin rewrites exactly the expected registry queries") {
+    val rewritten = gated.map(_.name)
+      .filter(n => planOf(n).contains("__graft_bucket")).toSet
+    assert(rewritten === bucketRewritten)
+  }
+
   test("allowlist carries no stale entries") {
     val stale = bnljAllowed.keySet.filterNot(n =>
       planOf(n).contains("BroadcastNestedLoopJoin"))
