@@ -110,27 +110,19 @@ object Bench {
     // processing time from the fixed AvailableNow bootstrap included in
     // streaming_total. Failed queries have no run, so no exec seconds.
     val streamExecTotal = runs.values.flatMap(_._2).sum
-    // Self-adjudicating host-drift controls (r10 burned real effort
-    // hand-running TimeQuery controls to separate a 25-30% host window from
-    // code changes). Six stable queries spanning profiles — DPP scan,
-    // bucketed join, iterative graph, codegen scan+agg, and (r12 verdict
-    // ask: the drift spread concentrated in families the controls didn't
-    // cover) a text battery and a dedup/window pipeline — are compared
-    // against their RECORDED builder-host steady-state in-bench mins; the
-    // median ratio is the run's host factor. Reading a bench: divide the
-    // headline by the factor before comparing rounds — factor >~1.15 means
-    // the host window, not the code, inflated this run relative to the
-    // reference window; factor <1 means a healthier window than the
-    // reference. All six records were pinned together from ONE r13
-    // mid-round calibration run (147.1 s batch / 270 queries / 0 failed,
-    // factor 0.947 against the previous four r11-era records — i.e. a
-    // healthier window than the old reference, so the old records were
-    // retired rather than mixed with new ones) and must be re-pinned if a
-    // control's code or fixture changes.
+    // Host-drift controls: six stable queries spanning profiles (DPP scan,
+    // bucketed join, iterative graph, codegen scan+agg, a text battery, a
+    // dedup/window pipeline) are compared against their recorded in-bench
+    // mins; the median ratio is the run's host factor. Divide the headline
+    // by it before comparing windows: >~1.15 means the host window, not
+    // the code, inflated this run. The six were pinned together from one
+    // sf0.1 run (BASELINE.md, "Bench re-baseline: runToCompletion", which
+    // gives its cores and heap) and must be re-pinned if a control's code,
+    // its fixture or the way Bench runs a query changes.
     val controlRecords = Map(
-      "layout_dpp" -> 1.126, "layout_bucketed" -> 1.346,
-      "graph_kcore" -> 3.677, "q1_pricing" -> 0.300,
-      "text_ngrams" -> 1.041, "pipeline_url_dedup" -> 1.129)
+      "layout_dpp" -> 0.747, "layout_bucketed" -> 1.645,
+      "graph_kcore" -> 3.173, "q1_pricing" -> 0.345,
+      "text_ngrams" -> 0.762, "pipeline_url_dedup" -> 0.428)
     // records are meaningful ONLY at the scale factor they were pinned at:
     // at any other sfDir the ratios measure data size, not host health, so
     // the block degrades to empty controls + factor 1.0 (documented as

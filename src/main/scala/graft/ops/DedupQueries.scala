@@ -1255,7 +1255,13 @@ object DedupQueries {
         .select(col("doc_id"), col("n_grams"),
           size(col("fps")).cast("long").as("n_fp"),
           array_distinct(col("fps")).as("dfps"))
-      val fpDocs = perDoc.select(col("doc_id"), explode(col("dfps")).as("fp"))
+      // explode_outer + a null filter, not explode: for a plain explode the
+      // optimizer infers `size(dfps) > 0` and pushes it below the projects
+      // by substituting their aliases, which inlines the whole gram and
+      // token-hash arrays at every `g` reference inside the selection
+      // lambda and turns the linear pass into a cubic one per document.
+      val fpDocs = perDoc.select(col("doc_id"), explode_outer(col("dfps")).as("fp"))
+        .filter(col("fp").isNotNull)
       val shared = fpDocs.groupBy(col("fp"))
         .agg(count(lit(1)).as("ndocs")).filter(col("ndocs") >= 2)
         .select(col("fp"))

@@ -122,6 +122,30 @@ class AsOfJoinSpec extends AnyFunSuite {
       Set((2L, 11L)))
   }
 
+  test("over LocalRelation inputs the left filter leaves the plan above the as-of join") {
+    import graft.plans.AsOfJoin
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan}
+    // the shape most callers build: Seq.toDF. The pushed filter is folded
+    // into the LocalRelation, so the check is on what stays above the join
+    val l = Seq((1L, 7L, 100L), (2L, 7L, 200L)).toDF("lid", "lkey", "ltime")
+    val r = Seq((10L, 7L, 50L), (11L, 7L, 150L)).toDF("rid", "rkey", "rtime")
+    val filtered = AsOfJoinOps.asofJoin(spark, l, r,
+        l("lkey"), r("rkey"), l("ltime"), r("rtime"), r("rid"))
+      .filter($"lid" === 2L && $"rid" > 5L)
+    val opt = filtered.queryExecution.optimizedPlan
+    def conditionsAbove(p: LogicalPlan): Seq[String] = p match {
+      case _: AsOfJoin => Nil
+      case f: LFilter => f.condition.toString +: conditionsAbove(f.child)
+      case o => o.children.flatMap(conditionsAbove)
+    }
+    val above = conditionsAbove(opt)
+    assert(opt.collect { case j: AsOfJoin => j }.nonEmpty, s"no AsOfJoin in:\n$opt")
+    assert(!above.exists(_.contains("lid")), s"left filter still above:\n$opt")
+    assert(above.exists(_.contains("rid")), s"right filter not above:\n$opt")
+    assert(filtered.select($"lid", $"rid").as[(Long, Long)].collect().toSet ===
+      Set((2L, 11L)))
+  }
+
   test("timestamp-typed time columns ride the long-backed fast path correctly") {
     import java.sql.Timestamp
     def ts(s: String) = Timestamp.valueOf(s)
