@@ -463,21 +463,27 @@ object FunctionQueries {
     * counts as ground truth plus integer within-band flags the oracle
     * states as constant 1 (±5% per sketch, ±10% for the subtracted
     * intersection where errors compound).
+    *
+    * As in `agg_approx`, the exact counts and the sketches are two global
+    * aggregates over the same scan, cross-joined (each is one row): in one
+    * aggregate Spark's distinct rewrite carries the four sketch buffers
+    * through every (distinct key) bucket of its first phase.
     */
   val aggHllSetops = QueryDef(
     "agg_hll_setops",
     (spark, dir) => {
-      load(spark, dir, "lineitem")
-        .select(col("l_returnflag"), col("l_partkey"))
-        .agg(
-          expr("hll_sketch_estimate(hll_sketch_agg(CASE WHEN l_returnflag = 'R' THEN l_partkey END))").as("est_a"),
-          expr("hll_sketch_estimate(hll_sketch_agg(CASE WHEN l_returnflag = 'N' THEN l_partkey END))").as("est_b"),
-          expr("""hll_sketch_estimate(hll_union(
-               hll_sketch_agg(CASE WHEN l_returnflag = 'R' THEN l_partkey END),
-               hll_sketch_agg(CASE WHEN l_returnflag = 'N' THEN l_partkey END)))""").as("est_u"),
-          expr("count(DISTINCT CASE WHEN l_returnflag = 'R' THEN l_partkey END)").as("exact_a"),
-          expr("count(DISTINCT CASE WHEN l_returnflag = 'N' THEN l_partkey END)").as("exact_b"),
-          expr("count(DISTINCT CASE WHEN l_returnflag IN ('R','N') THEN l_partkey END)").as("exact_union"))
+      val li = load(spark, dir, "lineitem").select(col("l_returnflag"), col("l_partkey"))
+      val exact = li.agg(
+        expr("count(DISTINCT CASE WHEN l_returnflag = 'R' THEN l_partkey END)").as("exact_a"),
+        expr("count(DISTINCT CASE WHEN l_returnflag = 'N' THEN l_partkey END)").as("exact_b"),
+        expr("count(DISTINCT CASE WHEN l_returnflag IN ('R','N') THEN l_partkey END)").as("exact_union"))
+      val sketch = li.agg(
+        expr("hll_sketch_estimate(hll_sketch_agg(CASE WHEN l_returnflag = 'R' THEN l_partkey END))").as("est_a"),
+        expr("hll_sketch_estimate(hll_sketch_agg(CASE WHEN l_returnflag = 'N' THEN l_partkey END))").as("est_b"),
+        expr("""hll_sketch_estimate(hll_union(
+             hll_sketch_agg(CASE WHEN l_returnflag = 'R' THEN l_partkey END),
+             hll_sketch_agg(CASE WHEN l_returnflag = 'N' THEN l_partkey END)))""").as("est_u"))
+      exact.crossJoin(sketch)
         .select(col("exact_a"), col("exact_b"), col("exact_union"),
           (col("exact_a") + col("exact_b") - col("exact_union")).as("exact_intersect"),
           (abs(col("est_a") - col("exact_a")) * 100 <= col("exact_a") * 5)

@@ -44,12 +44,14 @@ object Normalize {
   /** API-branch geolocation normalization (`:165-168`): JSON inference already
     * produced a struct (Socrata emits lat/lon as strings inside it); cast the
     * two coordinate fields and pin the struct to exactly the 3 gold fields
-    * (SURVEY §7.4.1 — inferred extras like `needs_recoding` are dropped).
+    * (SURVEY §7.4.1 — inferred extras like `needs_recoding` are dropped). A
+    * field the inferred schema lacks (or a missing `geolocation` column —
+    * rows without coordinates) reads as null.
     */
   def normalizeGeolocationStruct(df: DataFrame): Column = {
-    val fields = df.schema("geolocation").dataType match {
-      case s: StructType => s.fieldNames.toSet
-      case _             => Set.empty[String]
+    val fields = df.schema.find(_.name == "geolocation").map(_.dataType) match {
+      case Some(s: StructType) => s.fieldNames.toSet
+      case _                   => Set.empty[String]
     }
     def fld(name: String): Column =
       if (fields.contains(name)) col(s"geolocation.$name") else lit(null)
@@ -60,44 +62,33 @@ object Normalize {
   }
 
   /** Shared tail of the transform chain (`:170-202`): typed casts, the two
-    * `when` rewrites, snake_case renames, final 12-column projection.
+    * `when` rewrites, snake_case renames and the final 12-column projection,
+    * as ONE `select` over the branch's input with its geolocation column.
     */
-  private def finish(withGeo: DataFrame): DataFrame = {
-    withGeo
-      .withColumn("yearstart", tryTo(col("yearstart"), IntegerType))     // :170
-      .withColumn("yearend", tryTo(col("yearend"), IntegerType))         // :171
-      .withColumn("data_value", tryTo(col("data_value"), DoubleType))    // :172
-      .withColumn("sample_size", tryTo(col("sample_size"), IntegerType)) // :173
-      .withColumn("datasource",                                          // :174-175
-        when(col("datasource") === "Behavioral Risk Factor Surveillance System",
-          lit("BRFSS")).otherwise(col("datasource")))
-      .withColumn("data_value_type",                                     // :176-177
-        when(lower(col("question")).contains("percent"), lit("Percent"))
-          .otherwise(col("data_value_type")))
-      .withColumnRenamed("yearstart", "year_start")                      // :180-185
-      .withColumnRenamed("yearend", "year_end")
-      .withColumnRenamed("locationabbr", "location_abbreviation")
-      .withColumnRenamed("locationdesc", "location_description")
-      .withColumnRenamed("stratificationcategory1", "stratification_category_1")
-      .withColumnRenamed("stratification1", "stratification_1")
-      .select(goldColumns.map(col): _*)                                  // :189-202
-  }
+  private def finish(df: DataFrame, geolocation: Column): DataFrame =
+    df.select(
+      tryTo(col("yearstart"), IntegerType).as("year_start"),             // :170, :180
+      tryTo(col("yearend"), IntegerType).as("year_end"),                 // :171, :181
+      col("locationabbr").as("location_abbreviation"),                   // :182
+      col("locationdesc").as("location_description"),                   // :183
+      when(col("datasource") === "Behavioral Risk Factor Surveillance System",
+        lit("BRFSS")).otherwise(col("datasource")).as("datasource"),     // :174-175
+      col("class"),
+      when(lower(col("question")).contains("percent"), lit("Percent"))  // :176-177
+        .otherwise(col("data_value_type")).as("data_value_type"),
+      tryTo(col("data_value"), DoubleType).as("data_value"),             // :172
+      tryTo(col("sample_size"), IntegerType).as("sample_size"),          // :173
+      geolocation.as("geolocation"),
+      col("stratificationcategory1").as("stratification_category_1"),    // :184
+      col("stratification1").as("stratification_1"))                     // :185, :189-202
 
   /** BLOB/CSV branch (`:154-163` + shared tail). Input: all-string columns. */
   def fromCsv(df: DataFrame): DataFrame =
-    finish(
-      df.withColumn("geolocation_parsed", parseGeolocationString(col("geolocation")))
-        .drop("geolocation")                                             // :158
-        .withColumnRenamed("geolocation_parsed", "geolocation"))
+    finish(df, parseGeolocationString(col("geolocation")))               // :156-158
 
   /** API/JSON branch (`:165-168` + shared tail). Input: inferred JSON schema,
     * geolocation may be a struct or absent entirely (rows without coordinates).
     */
-  def fromApi(df: DataFrame): DataFrame = {
-    val withGeoCol =
-      if (df.columns.contains("geolocation")) df
-      else df.withColumn("geolocation",
-        lit(null).cast("struct<human_address:string,latitude:string,longitude:string>"))
-    finish(withGeoCol.withColumn("geolocation", normalizeGeolocationStruct(withGeoCol)))
-  }
+  def fromApi(df: DataFrame): DataFrame =
+    finish(df, normalizeGeolocationStruct(df))
 }

@@ -16,11 +16,10 @@ object ParityQueries {
     * compare never depends on struct-encoding differences between engines.
     */
   private def flattenGold(df: org.apache.spark.sql.DataFrame) = {
-    val flat = df
-      .withColumn("geo_human_address", col("geolocation.human_address"))
-      .withColumn("geo_latitude", col("geolocation.latitude"))
-      .withColumn("geo_longitude", col("geolocation.longitude"))
-      .drop("geolocation")
+    val flat = df.select(df.columns.toSeq.filter(_ != "geolocation").map(col) ++ Seq(
+      col("geolocation.human_address").as("geo_human_address"),
+      col("geolocation.latitude").as("geo_latitude"),
+      col("geolocation.longitude").as("geo_longitude")): _*)
     flat.orderBy(flat.columns.sorted.map(col): _*)
   }
 

@@ -1,6 +1,13 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Source layer — re-expression of the reference's ingestion surface
   * (`/root/reference/Spatially ETL test.py:38-135`: widget-dispatched BLOB-CSV
@@ -20,10 +27,48 @@ sealed trait Source {
 /** Headered CSV, all columns read as string — mirrors
   * `spark.read.format("csv").option("header","true").load(path)`
   * (`Spatially ETL test.py:131`): no `inferSchema`, typing happens downstream.
+  *
+  * A headered read with no schema resolves the header through a Spark job
+  * (`take(1)` over the file's lines) on every call. For a single FILE the
+  * header is read here on the driver instead, through Spark's own CSV
+  * helpers — `CSVUtils.readHeaderLine` (first line that is neither empty nor a
+  * comment), univocity's `parseLine` with Spark's parser settings,
+  * `CSVUtils.makeSafeHeader` (empty names → `_c<i>`, duplicates suffixed
+  * with their index, case-folded unless `spark.sql.caseSensitive`) — and
+  * the all-string schema is handed to `spark.read.schema`. A directory, a
+  * glob or a missing path keeps Spark's own inference (and its errors).
   */
 final case class CsvSource(path: String) extends Source {
-  override def load(spark: SparkSession): DataFrame =
-    spark.read.option("header", "true").csv(path)
+  override def load(spark: SparkSession): DataFrame = {
+    val reader = spark.read.option("header", "true")
+    CsvSource.fileHeaderSchema(spark, path)
+      .fold(reader.csv(path))(reader.schema(_).csv(path))
+  }
+}
+
+object CsvSource {
+  private val GlobChars = "{}[]*?\\"
+
+  /** The schema Spark's header inference gives a single file, or None when
+    * `path` is not a single existing file.
+    */
+  private def fileHeaderSchema(spark: SparkSession, path: String): Option[StructType] = {
+    if (path.exists(GlobChars.contains(_))) return None
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val status =
+      try Some(p.getFileSystem(conf).getFileStatus(p))
+      catch { case _: FileNotFoundException => None }
+    status.filter(_.isFile).map { st =>
+      val sqlConf = spark.sessionState.conf
+      val opts = new CSVOptions(Map("header" -> "true"), false, sqlConf.sessionLocalTimeZone)
+      val names = CSVUtils.readHeaderLine(st.getPath, opts, conf)
+        .flatMap(line => Option(new CsvParser(opts.asParserSettings).parseLine(line)))
+        .fold(Array.empty[String])(
+          CSVUtils.makeSafeHeader(_, sqlConf.caseSensitiveAnalysis, opts))
+      StructType(names.map(StructField(_, StringType)))
+    }
+  }
 }
 
 /** One page of a limit/offset-paginated feed: returns the page's records as raw
@@ -134,8 +179,8 @@ final case class PagedJsonSource(
     */
   def loadRaw(spark: SparkSession): Dataset[String] = {
     import spark.implicits._
-    // limit ≤ 0 would divide by zero; totalRecords ≤ 0 would otherwise hit
-    // repartition(0), which throws before load()'s reference-parity
+    // limit ≤ 0 would divide by zero; totalRecords ≤ 0 would otherwise ask
+    // range for 0 partitions, which throws before load()'s reference-parity
     // "No data fetched." — an empty Dataset lets that path fire instead
     require(limit > 0, s"page limit must be positive, got $limit")
     val nPages = ((totalRecords + limit - 1) / limit).toInt
@@ -143,8 +188,8 @@ final case class PagedJsonSource(
     val f = fetcher
     val lim = limit
     val strict = failOnDroppedPage
-    spark.range(0, nPages.toLong)
-      .repartition(math.min(nPages, 32))
+    // the page ids are split over the tasks by range itself: no shuffle
+    spark.range(0, nPages.toLong, 1, math.min(nPages, 32))
       .as[Long]
       .mapPartitions { pages =>
         pages.flatMap { p =>
@@ -163,7 +208,11 @@ final case class PagedJsonSource(
     // schema inference over JSON records, as `spark.read.json(full_rdd)` does
     // (`Spatially ETL test.py:125`); Dataset[String] overload is the Spark-4 form.
     val df = spark.read.json(raw)
-    if (df.isEmpty) throw new IllegalStateException("No data fetched.") // :128
+    // inference fetched every page once; a field in its schema
+    // (`_corrupt_record` included) proves a record exists, so only an empty
+    // schema costs a second fetch to tell no records from `{}` records
+    if (df.schema.isEmpty && df.isEmpty)
+      throw new IllegalStateException("No data fetched.") // :128
     df
   }
 }

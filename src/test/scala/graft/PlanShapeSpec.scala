@@ -19,6 +19,7 @@ class PlanShapeSpec extends AnyFunSuite {
     */
   private val bnljAllowed: Map[String, String] = Map(
     "agg_approx_quantile" -> "broadcast 1-row GK sketch result, re-ranked against the data",
+    "agg_hll_setops" -> "broadcast 1-row HLL sketch aggregate beside the 1-row exact-distinct aggregate",
     "cdc_diff" -> "broadcast 1-row stream-bounds aggregate (t1 cutoff)",
     "cdc_merge_apply" -> "broadcast 1-row stream-bounds aggregate (t1 cutoff)",
     "ann_bruteforce" -> "broadcast fixed query-vector set (8 probes) vs corpus",

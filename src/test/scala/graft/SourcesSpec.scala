@@ -9,6 +9,60 @@ import graft.sources._
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   private val pagesDir = s"${ops.ParityQueries.FixtureDir}/brfss_pages"
+  private val brfss = s"${ops.ParityQueries.FixtureDir}/brfss.csv"
+
+  private def withCaseSensitive[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.caseSensitive"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, on.toString)
+    try body
+    finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  private def sparkHeaderRead(path: String) =
+    spark.read.option("header", "true").csv(path)
+
+  test("csv header read on the driver: schema and rows equal Spark's header inference") {
+    val dir = SparkTestSession.tempDir("graft_csv_header")
+    def file(name: String, text: String): String = {
+      val f = java.nio.file.Paths.get(s"$dir/$name")
+      java.nio.file.Files.writeString(f, text)
+      f.toString
+    }
+    val files = Seq(
+      brfss,
+      file("dup.csv", "a,b,a\n1,2,3\n"),
+      file("dup_case.csv", "a,A,b\n1,2,3\n"),
+      file("empty_field.csv", "a,,c\n1,2,3\n"),
+      file("blank_first.csv", "\n  \na,b\n1,2\n"),
+      file("quoted.csv", "\"x,y\",z\n1,2\n"),
+      file("bom.csv", "\uFEFFa,b\n1,2\n"),
+      file("empty.csv", ""))
+    for (cs <- Seq(false, true); f <- files) withCaseSensitive(cs) {
+      val got = CsvSource(f).load(spark)
+      val want = sparkHeaderRead(f)
+      assert(got.schema === want.schema, s"$f caseSensitive=$cs")
+      assert(got.collect().toSeq === want.collect().toSeq, s"$f caseSensitive=$cs")
+    }
+    withCaseSensitive(false) {
+      assert(CsvSource(s"$dir/dup_case.csv").load(spark).columns.toSeq ===
+        Seq("a0", "A1", "b"))
+    }
+  }
+
+  test("csv load of a single file starts no Spark job") {
+    assert(SparkTestSession.jobsDuring(CsvSource(brfss).load(spark))._2 === 0)
+  }
+
+  test("csv load of a directory keeps Spark's header inference") {
+    val dir = SparkTestSession.tempDir("graft_csv_dir")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/part.csv"), "p,q\n1,2\n")
+    val (got, jobs) = SparkTestSession.jobsDuring(CsvSource(dir).load(spark))
+    assert(jobs > 0)
+    assert(got.schema === sparkHeaderRead(dir).schema)
+    assert(got.columns.toSeq === Seq("p", "q"))
+  }
 
   test("csv parse modes: PERMISSIVE nulls, DROPMALFORMED drops, FAILFAST throws") {
     // three malformation kinds: field-cast failure ("xx,3"), missing column
@@ -48,6 +102,20 @@ class SourcesSpec extends AnyFunSuite {
     val e = intercept[org.apache.spark.SparkException] { src.load(spark).count() }
     assert(e.getMessage.contains("page at offset") ||
       Option(e.getCause).exists(_.getMessage.contains("page at offset")))
+  }
+
+  test("records with no fields load without 'No data fetched.'") {
+    val blank = new PageFetcher {
+      def fetch(o: Long, l: Long) = Some(Iterator("{}", "{}"))
+    }
+    val df = PagedJsonSource(blank, 10L, 30L).load(spark)
+    assert(df.schema.isEmpty)
+    assert(df.count() === 6L)
+  }
+
+  test("page reads carry no shuffle") {
+    val src = PagedJsonSource(LocalFixturePageFetcher(pagesDir), 150L, 400L)
+    assert(SparkTestSession.shuffleCount(src.loadRaw(spark).toDF()) === 0)
   }
 
   test("empty result raises 'No data fetched.' (reference :128 parity)") {

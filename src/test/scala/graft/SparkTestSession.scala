@@ -46,4 +46,29 @@ object SparkTestSession {
     }
     count(df.queryExecution.executedPlan)
   }
+
+  /** `body`'s result and the Spark jobs it started on this thread (tagged
+    * by a job group; the listener bus is drained before counting).
+    */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      val out = body
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
 }

@@ -213,26 +213,9 @@ class TestdataSchemaSpec extends AnyFunSuite {
   }
 
   test("Tables.load of all 10 tables starts no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val sc = spark.sparkContext
-    val group = s"tables-load-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "Tables.load job count")
-    try {
-      TestdataContract.expected.keys.toSeq.sorted
-        .foreach(t => Tables.load(spark, sfDir, t).schema)
-      org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
-      assert(jobs.get == 0, s"${jobs.get} Spark jobs ran to load 10 tables")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val (_, jobs) = SparkTestSession.jobsDuring(TestdataContract.expected.keys.toSeq.sorted
+      .foreach(t => Tables.load(spark, sfDir, t).schema))
+    assert(jobs == 0, s"$jobs Spark jobs ran to load 10 tables")
   }
 
   test("a multi-file directory keeps Spark's schema inference") {
