@@ -33,15 +33,15 @@ object Bench {
     // reported by name instead, so a red run can never bench faster than a
     // green one.
     // Each run also keeps the micro-batch exec seconds of every stream it
-    // ran (lastExecSec, emptied before the run; None when it ran none), so
+    // ran (lastRuns, emptied before the run; None when it ran none), so
     // a query's exec split comes from the same run as its wall.
     def timedPass(): Map[String, Option[(Double, Option[Double])]] =
       SparkEntry.queries.map { case (name, fn) =>
-        ops.StreamingQueries.lastExecSec = Map.empty
+        ops.StreamingQueries.lastRuns = Map.empty
         val t0 = System.nanoTime()
         val ok = try { SparkEntry.runToCompletion(fn(spark, sfDir)); true }
           catch { case _: Throwable => false }
-        val execs = ops.StreamingQueries.lastExecSec.values
+        val execs = ops.StreamingQueries.lastRuns.values.map(_.execSec)
         name -> (if (ok) Some(((System.nanoTime() - t0) / 1e9,
           if (execs.isEmpty) None else Some(execs.sum))) else None)
       }
@@ -98,7 +98,7 @@ object Bench {
     // multi-second micro-batch bootstrap (checkpoint dir, query start/stop)
     // that measures Structured Streaming's setup cost, not engine throughput;
     // they are still timed individually and reported under streaming_total.
-    // "Streaming" = recorded a triggerExecution split (lastExecSec), which
+    // "Streaming" = recorded a triggerExecution split (lastRuns), which
     // also catches non-stream_-prefixed stream drivers like snapshot_asof —
     // keeping streaming_total and streaming_exec_total over the SAME set.
     val (streamRes, batchRes) = results.partition { case (n, _) =>

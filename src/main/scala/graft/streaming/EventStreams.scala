@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, MapState, OutputMode, StatefulProcessor,
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo,
+  GroupState, GroupStateTimeout, MapState, OutputMode, StatefulProcessor,
   StatefulProcessorWithInitialState, TTLConfig, TimeMode, TimerValues,
   ValueState}
 
@@ -265,7 +265,8 @@ object EventStreams {
     * applied twice double-counts (the upsert sink's argmax re-merge happens
     * to be idempotent; sum is not). Refresh cost per batch is |batch| rows
     * plus an O(groups) merge — independent of how much history the MV
-    * already aggregates, which is the whole point at 100 TB.
+    * already aggregates, which is the whole point at 100 TB. Like
+    * [[runUpsertSink]], returns the writer unstarted.
     */
   /** Checkpoint-scoped version-name tag shared by both versioned sinks:
     * SHA-256 prefix of the absolute checkpoint path (see [[runUpsertSink]]
@@ -298,7 +299,7 @@ object EventStreams {
     }
 
   def runAggSink(events: DataFrame, tablePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): DataStreamWriter[Row] = {
     val tag = ckptTag(checkpoint)
     events.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -326,7 +327,6 @@ object EventStreams {
         ()
       }
       .option("checkpointLocation", checkpoint)
-      .start()
   }
 
   /** foreachBatch upsert sink — the production pattern for "maintain a
@@ -353,9 +353,11 @@ object EventStreams {
     * matches the guard, while a new run merges cleanly on top of the old
     * snapshot under fresh directory names. (An ACID table format would
     * subsume the pointer dance; this is the plain-parquet equivalent.)
+    * Returns the writer unstarted, checkpoint set: the caller picks the
+    * trigger and starts it.
     */
   def runUpsertSink(events: DataFrame, tablePath: String,
-      checkpoint: String): org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpoint: String): DataStreamWriter[Row] = {
     val tag = ckptTag(checkpoint)
     events.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -378,7 +380,6 @@ object EventStreams {
         ()
       }
       .option("checkpointLocation", checkpoint)
-      .start()
   }
 
   /** [[sessionize]] upgraded with EVENT-TIME TIMEOUT: the production flush

@@ -319,26 +319,20 @@ object ScaleEvidence {
       (q, t1, tN, growth, perRow)
     } ++ streamTargets.flatMap { q =>
       // Streaming rows: each run is a fresh AvailableNow query (fresh
-      // checkpoint inside runToTable), so nothing is cached between runs.
+      // checkpoint inside streamRun), so nothing is cached between runs.
       // Two rows per query: wall (bootstrap + exec, the bench convention)
       // and _exec (micro-batch triggerExecution only) — state-store growth
       // shows in _exec; bootstrap is scale-invariant fixed cost.
       def once(dir: String): (Double, Double) = {
+        graft.ops.StreamingQueries.lastRuns = Map.empty
         val t0 = System.nanoTime()
         graft.SparkEntry.runToCompletion(registry(q)(spark, dir))
         val wall = (System.nanoTime() - t0) / 1e9
-        // the exec map is keyed by the memory-sink name ("<query>_sink");
-        // a MISS must be loud — falling back to wall silently reports
-        // bootstrap-inclusive time as the _exec row, masking exactly the
-        // state-store growth that row exists to isolate (the sink-name
-        // contract drifted once already)
-        val m = graft.ops.StreamingQueries.lastExecSec
-        val exec = m.get(q).orElse(m.get(s"${q}_sink")).getOrElse {
-          System.err.println(s"[scale] WARNING: no exec split for $q " +
-            s"(keys: ${m.keys.mkString(", ")}) — _exec row reports WALL time")
-          wall
-        }
-        (wall, exec)
+        // a miss fails the row rather than report bootstrap-inclusive
+        // wall time as _exec
+        val run = graft.ops.StreamingQueries.lastRuns.getOrElse(q,
+          sys.error(s"$q left no stream run record"))
+        (wall, run.execSec)
       }
       def best(dir: String): (Double, Double) = {
         once(dir) // warm: codegen outside the timer

@@ -10,7 +10,10 @@ import org.apache.spark.sql.functions.col
   * unbounded). This tool replays the documents corpus as N interleaved
   * slices through [[graft.ops.StreamingQueries.neardupStoreRun]] in either
   * config and prints the per-batch wall / store-file-count / maintenance
-  * trajectories the claims are graded on.
+  * trajectories the claims are graded on, then the neardup engine's
+  * per-stage milliseconds of each batch (`BatchStats.stageMs`: the
+  * batch-thread stages `sig` … `held`, then the writer thread's `bwrite`
+  * and `swrite`, which overlap the next batch).
   *
   * `embttl` runs the same axis on the EMBEDDING store (r14 verdict ask
   * #4: the embdup registry replay is 3 batches — neither retention nor
@@ -44,11 +47,11 @@ object StoreEndurance {
       val bitsOverride = sys.env.get("SPARK_GRAFT_EMB_BITS").map(_.toInt)
       // short warm replay first (same rationale as the text axis)
       S.embdupStoreRun(spark, "endure_warm_emb", emb,
-        S.stageVecModSlices(emb, 3), retainBatches = Some(k),
+        S.stageSlices(emb, 3, col("vec_id") % 3), retainBatches = Some(k),
         bitsOverride = bitsOverride).count()
       val t0 = System.nanoTime()
       val h = S.embdupStoreRun(spark, s"endure_embttl_$slices", emb,
-        S.stageVecModSlices(emb, slices),
+        S.stageSlices(emb, slices, col("vec_id") % slices),
         retainBatches = Some(k), onBatch = Some(stats += _),
         bitsOverride = bitsOverride).count()
       (h, (System.nanoTime() - t0) / 1e9)
@@ -72,10 +75,12 @@ object StoreEndurance {
     // no compaction (retention bounds its files; the zeros are hard zeros
     // from the engine, not text-engine counter echoes) — label accordingly
     // (r15 ADVICE: the embttl trajectory printed under text-store headers)
+    val stages = stats.headOption.map(_.stageMs.map(_._1)).getOrElse(Nil)
     if (mode == "embttl")
       println("[endure] batch wallMs bandFiles vecFiles drops")
     else
-      println("[endure] batch wallMs bandFiles sigFiles compactions sigCompactions drops")
+      println("[endure] batch wallMs bandFiles sigFiles compactions " +
+        "sigCompactions drops" + stages.map(st => s" ${st}Ms").mkString)
     val prevC = stats.headOption.map(_.compactions).getOrElse(0L)
     val prevS = stats.headOption.map(_.sigCompactions).getOrElse(0L)
     val prevD = stats.headOption.map(_.drops).getOrElse(0L)
@@ -87,7 +92,8 @@ object StoreEndurance {
       else
         println(s"[endure] ${s.batchId} ${s.wallMs} ${s.bandFiles} " +
           s"${s.sigFiles} ${s.compactions - prevC} " +
-          s"${s.sigCompactions - prevS} ${s.drops - prevD}")
+          s"${s.sigCompactions - prevS} ${s.drops - prevD}" +
+          s.stageMs.map { case (_, ms) => s" $ms" }.mkString)
     }
     // quartile summary: the plateau/bound claim in one line per quarter
     val q = math.max(1, stats.size / 4)

@@ -11,7 +11,7 @@ import graft.ops.StreamingQueries
   *
   * Prints one `[timequery] <query> min=… warm=… times=…` line per query.
   * A query that runs streams also prints one `[timequery] <query> exec …`
-  * line per stream (its `StreamingQueries.lastExecSec` key): the summed
+  * line per stream (its `StreamingQueries.lastRuns` key): the summed
   * micro-batch execution seconds of the warm-up and of each timed run. That
   * splits real micro-batch work from the fixed AvailableNow bootstrap
   * (checkpoint dir, query start/stop), where most wall drift on streams
@@ -69,10 +69,11 @@ object TimeQuery {
       }
       // one run: its wall and the exec seconds of every stream it ran
       def once(): (Double, Map[String, Double]) = {
-        StreamingQueries.lastExecSec = Map.empty
+        StreamingQueries.lastRuns = Map.empty
         val t0 = System.nanoTime()
         SparkEntry.runToCompletion(fn(spark, sfDir))
-        ((System.nanoTime() - t0) / 1e9, StreamingQueries.lastExecSec)
+        ((System.nanoTime() - t0) / 1e9,
+          StreamingQueries.lastRuns.map { case (k, r) => k -> r.execSec })
       }
       val warm = once() // warm-up: codegen + parquet footers
       val runs = Seq.fill(reps)(once())

@@ -290,7 +290,7 @@ class StreamingSpec extends AnyFunSuite {
     val table = SparkTestSession.tempDir("graft_upsert")
     val ckpt = SparkTestSession.tempDir("graft_upsert_ck")
     val input = MemoryStream[Event]
-    val q = EventStreams.runUpsertSink(input.toDF(), table, ckpt)
+    val q = EventStreams.runUpsertSink(input.toDF(), table, ckpt).start()
     try {
       input.addData(
         Event(1, ts(10), 1, "view", 1.5),
@@ -319,7 +319,7 @@ class StreamingSpec extends AnyFunSuite {
     val table = SparkTestSession.tempDir("graft_mv")
     val ckpt = SparkTestSession.tempDir("graft_mv_ck")
     val input = MemoryStream[Event]
-    val q = EventStreams.runAggSink(input.toDF(), table, ckpt)
+    val q = EventStreams.runAggSink(input.toDF(), table, ckpt).start()
     try {
       input.addData(
         Event(1, ts(10), 1, "click", 1.00),
@@ -345,7 +345,7 @@ class StreamingSpec extends AnyFunSuite {
     val table = SparkTestSession.tempDir("graft_tt")
     val ckpt = SparkTestSession.tempDir("graft_tt_ck")
     val input = MemoryStream[Event]
-    val q = EventStreams.runUpsertSink(input.toDF(), table, ckpt)
+    val q = EventStreams.runUpsertSink(input.toDF(), table, ckpt).start()
     try {
       input.addData(Event(1, ts(10), 1, "view", 1.0))
       q.processAllAvailable()          // v0: user1 -> event 1
@@ -381,7 +381,7 @@ class StreamingSpec extends AnyFunSuite {
     val table = SparkTestSession.tempDir("graft_upsert2")
     val ck1 = SparkTestSession.tempDir("graft_upsert2_ck1")
     val in1 = MemoryStream[Event]
-    val q1 = EventStreams.runUpsertSink(in1.toDF(), table, ck1)
+    val q1 = EventStreams.runUpsertSink(in1.toDF(), table, ck1).start()
     try {
       in1.addData(Event(1, ts(10), 1, "view", 1.5))
       q1.processAllAvailable()
@@ -390,7 +390,7 @@ class StreamingSpec extends AnyFunSuite {
     // must not mistake this run's batch 0 for the old run's completed one
     val ck2 = SparkTestSession.tempDir("graft_upsert2_ck2")
     val in2 = MemoryStream[Event]
-    val q2 = EventStreams.runUpsertSink(in2.toDF(), table, ck2)
+    val q2 = EventStreams.runUpsertSink(in2.toDF(), table, ck2).start()
     try {
       in2.addData(Event(2, ts(20), 2, "view", 2.5))
       q2.processAllAvailable()
@@ -472,7 +472,8 @@ class StreamingSpec extends AnyFunSuite {
     // and compare as sets — and require that the run really was
     // incremental (≥2 data batches), or the equality would be trivial.
     val sfDir = "/root/testdata/sf0.001"
-    val prefixes = Seq("graft-ndv-", "graft-docslice-")
+    val prefixes = Seq("graft-ndv-", "graft-slice-",
+      "graft-stream_neardup_verified-")
     val dirsBefore = scaffolding(prefixes: _*)
     val held = graft.ops.StreamingQueries.streamNeardupVerified
       .fn(spark, sfDir)
@@ -484,7 +485,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(leftover.isEmpty,
       s"verified gate leaked temp scaffolding: $leftover")
     assert(graft.ops.StreamingQueries
-      .lastBatchCounts("stream_neardup_verified") >= 2,
+      .lastRuns("stream_neardup_verified").dataBatches >= 2,
       "verified gate ran as a single batch — incremental claim not exercised")
     val removable = graft.ops.DedupQueries.dedupMinhashLsh.fn(spark, sfDir)
       .filter(org.apache.spark.sql.functions.col("canonical_id") <
@@ -507,7 +508,7 @@ class StreamingSpec extends AnyFunSuite {
     val rows = graft.ops.StreamingQueries.streamNeardupUnordered
       .fn(spark, "/root/testdata/sf0.001").collect()
     assert(graft.ops.StreamingQueries
-      .lastBatchCounts("stream_neardup_unordered") >= 2,
+      .lastRuns("stream_neardup_unordered").dataBatches >= 2,
       "unordered gate ran as a single batch — incremental claim not exercised")
     def total(c: String): Long = rows.map(_.getAs[Long](c)).sum
     val (nHeld, nHeldDup) = (total("n_held"), total("n_held_dup"))
@@ -545,7 +546,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
     assert(S.retentionDrops.get() > dropsBefore,
       "no expired bid partition was physically dropped")
-    assert(S.lastBatchCounts("spec_ttl6") >= 4,
+    assert(S.lastRuns("spec_ttl6").dataBatches >= 4,
       "6-slice replay ran fewer than 4 data batches — window not exercised")
     val pairs = graft.ops.DedupQueries.verifiedPairs(docs)
       .select(col("a_id"), col("b_id")).collect()
@@ -587,7 +588,7 @@ class StreamingSpec extends AnyFunSuite {
         S.stageDocModSlices(docs, 6), retainBatches = Some(k),
         eventBid = Some(lateBid))
       .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    assert(S.lastBatchCounts("spec_late6") >= 4,
+    assert(S.lastRuns("spec_late6").dataBatches >= 4,
       "6-slice replay ran fewer than 4 data batches — window not exercised")
     val pairs = graft.ops.DedupQueries.verifiedPairs(docs)
       .select(col("a_id"), col("b_id")).collect()
@@ -696,7 +697,8 @@ class StreamingSpec extends AnyFunSuite {
     // incremental, and the interleave must actually invert id order
     // somewhere or the arrival semantics are untested
     val sfDir = "/root/testdata/sf0.001"
-    val prefixes = Seq("graft-emb-", "graft-docslice-")
+    val prefixes = Seq("graft-emb-", "graft-slice-",
+      "graft-stream_embdup_verified-")
     val dirsBefore = scaffolding(prefixes: _*)
     val held = graft.ops.StreamingQueries.streamEmbdupVerified
       .fn(spark, sfDir)
@@ -704,7 +706,7 @@ class StreamingSpec extends AnyFunSuite {
     val leftover = scaffolding(prefixes: _*) -- dirsBefore
     assert(leftover.isEmpty, s"embdup stream leaked temp scaffolding: $leftover")
     assert(graft.ops.StreamingQueries
-      .lastBatchCounts("stream_embdup_verified") >= 2,
+      .lastRuns("stream_embdup_verified").dataBatches >= 2,
       "embdup gate ran as a single batch — incremental claim not exercised")
     // the REGISTRY width: auto-derived from the corpus count, exactly as
     // both the batch query and the stream derive it
@@ -726,20 +728,79 @@ class StreamingSpec extends AnyFunSuite {
 
   test("curate quota stream: every doc gets one verdict, no temp scaffolding left") {
     val sfDir = smallSf
-    val prefixes = Seq("graft-scq-", "graft-docslice-")
+    val prefixes = Seq("graft-scq-", "graft-slice-",
+      "graft-stream_curate_quota-")
     val dirsBefore = scaffolding(prefixes: _*)
     val rows = graft.ops.StreamingQueries.streamCurateQuota.fn(spark, sfDir)
       .collect()
     val leftover = scaffolding(prefixes: _*) -- dirsBefore
     assert(leftover.isEmpty, s"curate stream leaked temp scaffolding: $leftover")
     assert(graft.ops.StreamingQueries
-      .lastBatchCounts("stream_curate_quota") >= 2,
+      .lastRuns("stream_curate_quota").dataBatches >= 2,
       "curate gate ran as a single batch — cross-batch state not exercised")
     val nDocs = graft.Tables.load(spark, sfDir, "documents").count()
     assert(rows.map(_.getAs[Long]("n_docs")).sum === nDocs)
     // the budget binds and the fp store catches cross-batch dups
     val verdicts = rows.map(_.getAs[String]("verdict")).toSet
     assert(Set("4_dup", "5_quota", "6_kept").subsetOf(verdicts), s"$verdicts")
+  }
+
+  test("stream runs: one record per query under its registry name") {
+    val S = graft.ops.StreamingQueries
+    S.lastRuns = Map.empty
+    Seq(S.streamTumbling, S.snapshotAsof, S.streamCurateQuota)
+      .foreach(_.fn(spark, smallSf).collect())
+    assert(S.lastRuns.keySet ===
+      Set("stream_tumbling", "snapshot_asof", "stream_curate_quota"))
+    S.lastRuns.foreach { case (name, run) =>
+      assert(run.execSec > 0.0, s"$name: no micro-batch exec time")
+      assert(run.dataBatches >= 1, s"$name: no batch carried rows")
+    }
+    // AvailableNow honours maxFilesPerTrigger: one batch per slice file
+    assert(S.lastRuns("snapshot_asof").dataBatches === 3)
+  }
+
+  test("stream runs: a rejected conf restores every conf it touched, leaves no checkpoint dir") {
+    val S = graft.ops.StreamingQueries
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val partitions = "spark.sql.shuffle.partitions"
+    val before = Seq(provider, partitions).map(k => k -> spark.conf.getOption(k))
+    val dirsBefore = scaffolding("graft-spec_badconf-")
+    var wrote = false
+    intercept[IllegalArgumentException] {
+      S.streamRun(spark, "spec_badconf", Map(
+          provider -> ("org.apache.spark.sql.execution.streaming." +
+            "state.RocksDBStateStoreProvider"),
+          partitions -> "x")) { _ =>
+        wrote = true
+        sys.error("the run must fail before its query is built")
+      }(_ => spark.emptyDataFrame)
+    }
+    assert(!wrote)
+    assert(Seq(provider, partitions).map(k => k -> spark.conf.getOption(k)) ===
+      before)
+    assert(scaffolding("graft-spec_badconf-") -- dirsBefore === Set.empty[String])
+  }
+
+  test("stageSlices: one file per slice of events, strictly increasing mtimes") {
+    import org.apache.spark.sql.functions.col
+    val S = graft.ops.StreamingQueries
+    val ev = graft.Tables.load(spark, smallSf, "events")
+    val dir = S.stageSlices(ev, 3, col("event_id") % 3)
+    try {
+      val files = new java.io.File(dir).listFiles().sortBy(_.getName).toSeq
+      assert(files.map(_.getName) ===
+        Seq("slice-0.parquet", "slice-1.parquet", "slice-2.parquet"))
+      val mtimes = files.map(_.lastModified)
+      assert(mtimes.zip(mtimes.tail).forall { case (a, b) => a < b },
+        s"mtimes not strictly increasing: $mtimes")
+      files.zipWithIndex.foreach { case (f, i) =>
+        assert(spark.read.parquet(f.toString)
+          .filter(col("event_id") % 3 =!= i).count() === 0L,
+          s"slice $i holds another slice's rows")
+      }
+      assert(spark.read.parquet(dir).count() === ev.count())
+    } finally graft.Tables.deleteTree(dir)
   }
 
   test("pipelined store: a failed batch-0 write fails the run with its cause, leaves no dirs, stops the writer") {
@@ -816,7 +877,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(shared.forall(d =>
         new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet")) >= 6),
       "a store run deleted (part of) the shared slice dir")
-    assert(S.lastBatchCounts("stream_neardup_late") === 6,
+    assert(S.lastRuns("stream_neardup_late").dataBatches === 6,
       "late did not replay all six shared slices")
     assert(late.map(_.getAs[Long]("n_held")).sum > 0L)
   }
@@ -942,6 +1003,10 @@ class StreamingSpec extends AnyFunSuite {
     }
     val ttl = run("ttl")
     assert(ttl.size === 24, s"expected 24 batches, saw ${ttl.size}")
+    // every batch records the engine's stage timings, writer stages last
+    assert(ttl.forall(_.stageMs.map(_._1) ==
+      Seq("sig", "bands", "touch", "plan", "held", "bwrite", "swrite")),
+      s"stage records: ${ttl.map(_.stageMs)}")
     val warm = ttl.drop(k + 1)
     // TTL: the window bounds the store regardless of stream life — at most
     // k+1 live bids, each holding at most one file per (w, pb) dir / one
