@@ -19,10 +19,7 @@ object Bench {
     // (serialized first-touch faults), so a cold pass measures the host's
     // page loader, not the engine; the timed pass below runs on a heap whose
     // pages are already resident and measures steady-state query speed.
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try SparkEntry.runToCompletion(fn(spark, sfDir))
-      catch { case _: Throwable => () }
-    }
+    SparkEntry.queries.values.foreach(fn => SparkEntry.timeRun(spark)(fn(spark, sfDir)))
     // Two timed passes, per-query minimum: this host stalls tens of seconds
     // at random on first-touch page provisioning (see BASELINE.md); the min
     // of two warm runs reports engine speed, not whichever query a stall
@@ -32,18 +29,15 @@ object Bench {
     // headline total IMPROVE; failures are excluded from every total and
     // reported by name instead, so a red run can never bench faster than a
     // green one.
-    // Each run also keeps the micro-batch exec seconds of every stream it
-    // ran (lastRuns, emptied before the run; None when it ran none), so
-    // a query's exec split comes from the same run as its wall.
+    // Each run also keeps the summed micro-batch exec seconds of the streams
+    // it ran (None when it ran none), so a query's exec split comes from the
+    // same run as its wall.
     def timedPass(): Map[String, Option[(Double, Option[Double])]] =
       SparkEntry.queries.map { case (name, fn) =>
-        ops.StreamingQueries.lastRuns = Map.empty
-        val t0 = System.nanoTime()
-        val ok = try { SparkEntry.runToCompletion(fn(spark, sfDir)); true }
-          catch { case _: Throwable => false }
-        val execs = ops.StreamingQueries.lastRuns.values.map(_.execSec)
-        name -> (if (ok) Some(((System.nanoTime() - t0) / 1e9,
-          if (execs.isEmpty) None else Some(execs.sum))) else None)
+        name -> SparkEntry.timeRun(spark)(fn(spark, sfDir)).toOption.map { r =>
+          val execs = r.streams.values.map(_.execSec)
+          (r.wallSec, if (execs.isEmpty) None else Some(execs.sum))
+        }
       }
     // Pass count is env-tunable (SPARK_GRAFT_BENCH_PASSES, default 2): the
     // driver host shows broad ±0.2-0.4 s per-query drift that two passes
@@ -72,28 +66,6 @@ object Bench {
     val qs = results.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    // Cross-query sharing that keeps per-query numbers honest to read
-    // (r13 verdict ask #3): dedup_minhash_lsh and the three COMPARISON
-    // passes (stream_neardup_{unordered,ttl,late}) share TWO plan-keyed
-    // caches from DedupQueries.verifiedPairs — the corpus minhash
-    // signatures and the VERIFIED pair set. Whichever of those FOUR runs
-    // first in the warm pass pays the build; every timed pass reads both
-    // warm. So those stream queries' time = staging + replay (the engine's
-    // own per-batch signature/band/verify work is NOT shared — it
-    // recomputes on arrival inside foreachBatch) + a warm-cache comparison
-    // join. stream_neardup_verified is NOT a sharer: its oracle needs no
-    // comparison join, so its time is pure staging + replay. The honest
-    // cold cost of the comparison frames lives in the dedup_minhash_lsh
-    // TimeQuery row, same convention as the BPE memo. The embedding twin
-    // has NO bench-time cache: VectorQueries.embVerifiedPairs is shared
-    // code, not a shared cache (its only bench-time consumer is
-    // dedup_embedding_lsh itself — caching would just deflate that
-    // tracked number), and stream_embdup_verified runs pure staging +
-    // replay, like stream_neardup_verified. r15: ttl and late ALSO share
-    // one memoized mod-6 staged replay dir (the slicing is identical;
-    // only the engine-side bid rule differs) — whichever runs first pays
-    // the one staging job, so the second's number is replay + comparison
-    // only; the staging cost still shows in the first sharer's row.
     // headline total = batch queries only: each streaming query pays a fixed
     // multi-second micro-batch bootstrap (checkpoint dir, query start/stop)
     // that measures Structured Streaming's setup cost, not engine throughput;

@@ -1,8 +1,10 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * All queries live in the per-area registries under [[graft.ops]]; each
   * [[QueryDef]] pairs the Spark implementation with its DuckDB oracle SQL so
@@ -10,14 +12,37 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
-  /** Runs `df` to completion and discards its rows: the one way the timing
-    * and profiling mains run a registry query. Every output column is
+  /** Runs `df` to completion and discards its rows: the way [[timeRun]]
+    * runs a query. Every output column is
     * evaluated. `count()` is not a run: it prunes the plan to no columns,
     * so a projection no row count needs (a UDF, a verify step) never
     * executes, and an order-by's sort is dropped.
     */
   def runToCompletion(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
+
+  /** One timed run: its wall seconds and the [[ops.StreamingQueries.StreamRun]]
+    * record of every stream it ran, keyed by registry name. */
+  final case class TimedRun(wallSec: Double,
+      streams: Map[String, ops.StreamingQueries.StreamRun])
+
+  /** Times one [[runToCompletion]] of `df`, built inside the timer (a stream
+    * query runs its streams while it builds): the one way the timing mains
+    * time a query. Spark's cache is cleared first, so a query that
+    * `.cache()`s an intermediate pays for it in every run, and
+    * `StreamingQueries.lastRuns` is emptied, so the stream records are this
+    * run's. A failed run is a `Failure` and never has a time.
+    */
+  def timeRun(spark: SparkSession)(df: => DataFrame): Try[TimedRun] = {
+    spark.catalog.clearCache()
+    ops.StreamingQueries.lastRuns = Map.empty
+    val t0 = System.nanoTime()
+    try {
+      runToCompletion(df)
+      Success(TimedRun((System.nanoTime() - t0) / 1e9,
+        ops.StreamingQueries.lastRuns))
+    } catch { case e: Throwable => Failure(e) }
+  }
 
   /** Every registered query (implementation + oracle). */
   def registry: Seq[QueryDef] =

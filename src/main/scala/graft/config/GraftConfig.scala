@@ -1,5 +1,6 @@
 package graft.config
 
+import graft.ops.ParityQueries
 import graft.sources.{CsvSource, LocalFixturePageFetcher, PagedJsonSource, Source}
 
 /** Pipeline parameterization — the reference's notebook widgets
@@ -35,9 +36,9 @@ object GraftConfig {
     GraftConfig(
       dataSource = env("GRAFT_DATA_SOURCE").getOrElse("BLOB"),
       filePath = env("GRAFT_FILE_PATH")
-        .getOrElse("/root/repo/src/test/resources/brfss.csv"),
+        .getOrElse(s"${ParityQueries.FixtureDir}/brfss.csv"),
       pagesDir = env("GRAFT_PAGES_DIR")
-        .getOrElse("/root/repo/src/test/resources/brfss_pages"),
+        .getOrElse(s"${ParityQueries.FixtureDir}/brfss_pages"),
       limit = parseLong("GRAFT_PAGE_LIMIT", env).getOrElse(10000L),
       totalRecords = parseLong("GRAFT_TOTAL_RECORDS", env).getOrElse(93249L),
       clientId = env("GRAFT_CLIENT_ID"),

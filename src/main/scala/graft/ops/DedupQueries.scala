@@ -280,12 +280,10 @@ object DedupQueries {
     * batch query itself.
     */
   def verifiedPairs(docs: DataFrame): DataFrame = {
-    // the cache is DELIBERATELY never unpersisted: it is plan-keyed (one
-    // entry per fixture, ~3 MB of signatures at sf0.1, MEMORY_AND_DISK),
-    // and both consumers (dedup_minhash_lsh's repeated bench passes, the
-    // unordered gate's comparison set) re-hit the same entry warm —
-    // unpersisting at query end would force every timed pass to
-    // rematerialize the full corpus signature build
+    // cached: the run reads the signatures three times (bands, both sides
+    // of the verify join). The entry is plan-keyed (one per fixture, ~3 MB
+    // at sf0.1) and never unpersisted here; SparkEntry.timeRun clears
+    // Spark's cache before each timed run, so every timed run pays the build
     val sigs = minhashSignatures(docs).cache()
     val rows = NumPerms / MinhashBands
     val bands = sigs.select(col("doc_id"), col("lang"), explode(array(
@@ -301,14 +299,11 @@ object DedupQueries {
     val withSigs = candIds
       .join(sigs.select(col("doc_id").as("a_id"), col("sig").as("sa")), "a_id")
       .join(sigs.select(col("doc_id").as("b_id"), col("sig").as("sb")), "b_id")
-    // the VERIFIED pairs are cached too (r13 verdict ask #3): four
-    // consumers re-derive this exact frame per bench pass
-    // (dedup_minhash_lsh + the unordered/ttl/late streaming comparisons),
-    // each paying the candidate join + verify fold; the filtered result is
-    // tiny (verified pairs only) and plan-keyed like the sigs cache above,
-    // so all consumers on the same fixture hit one warm entry instead of
-    // each pinning a private localCheckpoint copy. Verify via the
-    // early-exit predicate form (every consumer reads only the id pair).
+    // the VERIFIED pairs are cached too, plan-keyed like the sigs above:
+    // a consumer that reads them twice in one run (the unordered/ttl/late
+    // streaming comparisons) pays the candidate join + verify fold once.
+    // Verify via the early-exit predicate form (every consumer reads only
+    // the id pair).
     withSigs
       .filter(sigOverlapAtLeast(col("sa"), col("sb"), VerifyMin))
       .select(col("a_id"), col("b_id"))

@@ -690,7 +690,8 @@ object FunctionQueries {
     (spark, dir) => {
       // serialize+parse+2 xpath per row is row-local-heavy: spread the
       // single-file fixture scan before it or it all runs in ONE task
-      // (ShuffleAudit measured max1taskS 1.30 s; no-op on cluster scans)
+      // (TimeQuery's profile line measured max1taskS 1.30 s; no-op on
+      // cluster scans)
       val base = graft.Tables.spreadIfNarrow(load(spark, dir, "events")
           .select(col("event_type"), cents(col("value")).as("cents_in")))
         .withColumn("x", to_xml(struct(col("event_type"), col("cents_in"))))

@@ -70,10 +70,4 @@ object GoldPipeline {
          |  AND stratification_category_1 NOT RLIKE '(?i)total'""".stripMargin)
     spark.table(table)
   }
-
-  /** Writer-API equivalent of [[ctasGold]] — the reference documents the
-    * equivalence itself (`:229-231`).
-    */
-  def sinkAsTable(spark: SparkSession, df: DataFrame, table: String): Unit =
-    df.write.mode("overwrite").saveAsTable(table)
 }

@@ -10,7 +10,12 @@ import graft.sources.{CsvSource, LocalFixturePageFetcher, PagedJsonSource}
   */
 object ParityQueries {
 
-  val FixtureDir = "/root/repo/src/test/resources"
+  /** The checkout's bundled fixtures, resolved from the working directory
+    * (sbt's forked run and test JVMs and `tools/runtool.sh` start in the
+    * checkout root). Not checked here: a missing fixture fails when it is
+    * read, naming its path. */
+  val FixtureDir: String =
+    java.nio.file.Paths.get("src/test/resources").toAbsolutePath.toString
 
   /** Flattened gold output: struct fields as scalar columns so the DuckDB hash
     * compare never depends on struct-encoding differences between engines.

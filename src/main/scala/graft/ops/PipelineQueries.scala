@@ -381,7 +381,7 @@ object PipelineQueries {
       // the gophered checkpoint materializes with the AQE-coalesced
       // partitioning of its join (ONE partition at sf0.1), which made this
       // stage, the heaviest per-row compute in the query, single-threaded
-      // (JobProfile: one 1.4 s single-task job). Exchanging the narrow doc
+      // (a TimeQuery job line: one 1.4 s single-task job). Exchanging the narrow doc
       // rows pre-explode also REPLACES the post-explode token-stream
       // exchange (HashPartitioning(doc_id) satisfies the signature agg's
       // (doc_id, lang) clustering), so the shuffle moves BEFORE the ×|doc|

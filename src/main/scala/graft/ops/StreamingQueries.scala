@@ -1215,10 +1215,6 @@ object StreamingQueries {
   private[graft] def bandBucket(band: Column, bh: Column): Column =
     pmod(hash(band, bh), lit(StoreBuckets))
 
-  /** Sig-store partition bucket: hash of the doc id. */
-  private[graft] def sigBucket(id: Column): Column =
-    pmod(hash(id), lit(StoreBuckets))
-
   // isin() with an empty list is not a match-nothing filter; make it one
   private def inBuckets(c: Column, vs: Seq[Int]): Column =
     if (vs.isEmpty) lit(false) else c.isin(vs.map(Integer.valueOf): _*)

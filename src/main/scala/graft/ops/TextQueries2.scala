@@ -912,8 +912,6 @@ ${bpeRoundSql(1)}
     }
   }
 
-  private[graft] def bpeMemoSize: Int = bpeMemo.size
-
   private[graft] def bpeTrainState(spark: org.apache.spark.sql.SparkSession,
       dir: String): (Vector[org.apache.spark.sql.DataFrame],
         org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame, Long) =

@@ -83,10 +83,12 @@ trait PageFetcher extends Serializable {
 /** Stands in for the reference's Socrata HTTP GET (`Spatially ETL test.py:102-109`)
   * in this zero-egress environment: pages are pre-materialized JSONL files
   * `page_<offset/limit>.jsonl` under `dir`. Same limit/offset contract, same
-  * missing-page => None semantics.
+  * missing-page => None semantics; a missing `dir` fails, naming it.
   */
 final case class LocalFixturePageFetcher(dir: String) extends PageFetcher {
   override def fetch(offset: Long, limit: Long): Option[Iterator[String]] = {
+    if (!new java.io.File(dir).isDirectory)
+      throw new FileNotFoundException(s"fixture page dir $dir does not exist")
     val f = new java.io.File(dir, s"page_${offset / limit}.jsonl")
     if (!f.isFile) None
     else {

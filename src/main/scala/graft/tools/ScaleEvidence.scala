@@ -293,84 +293,45 @@ object ScaleEvidence {
       s"events=$nEvents (factor=$factor)")
 
     val registry = graft.SparkEntry.queries
-    def time(name: String, dir: String): Double = {
-      val fn = registry(name)
-      // warm: codegen + page faults outside the timer
-      graft.SparkEntry.runToCompletion(fn(spark, dir))
-      def once(): Double = {
-        // drop plan-matched InMemoryRelations between runs: queries that
-        // .cache() an intermediate (minhash signatures) would otherwise be
-        // timed on a cache hit, excluding exactly the linear compute this
-        // tool exists to measure
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        graft.SparkEntry.runToCompletion(fn(spark, dir))
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once(), once())
+    // warm-up (codegen + page faults), then the faster of two timed runs
+    def best(df: => DataFrame): graft.SparkEntry.TimedRun = {
+      graft.SparkEntry.timeRun(spark)(df).get
+      Seq.fill(2)(graft.SparkEntry.timeRun(spark)(df).get).minBy(_.wallSec)
+    }
+    def row(name: String, t1: Double, tN: Double) = {
+      val (growth, perRow) = (tN / t1, tN / t1 / factor)
+      println(f"$name%-22s $t1%8.2f $tN%8.2f $growth%7.1fx $perRow%7.2fx")
+      (name, t1, tN, growth, perRow)
     }
     println(f"${"query"}%-22s ${"t_1x"}%8s ${s"t_${factor}x"}%8s ${"growth"}%8s ${"perRow"}%8s")
     val rows = targets.map { q =>
-      val t1 = time(q, baseDir)
-      val tN = time(q, outDir)
-      val growth = tN / t1
-      val perRow = growth / factor
-      println(f"$q%-22s $t1%8.2f $tN%8.2f $growth%7.1fx $perRow%7.2fx")
-      (q, t1, tN, growth, perRow)
+      row(q, best(registry(q)(spark, baseDir)).wallSec,
+        best(registry(q)(spark, outDir)).wallSec)
     } ++ streamTargets.flatMap { q =>
       // Streaming rows: each run is a fresh AvailableNow query (fresh
-      // checkpoint inside streamRun), so nothing is cached between runs.
-      // Two rows per query: wall (bootstrap + exec, the bench convention)
-      // and _exec (micro-batch triggerExecution only) — state-store growth
-      // shows in _exec; bootstrap is scale-invariant fixed cost.
-      def once(dir: String): (Double, Double) = {
-        graft.ops.StreamingQueries.lastRuns = Map.empty
-        val t0 = System.nanoTime()
-        graft.SparkEntry.runToCompletion(registry(q)(spark, dir))
-        val wall = (System.nanoTime() - t0) / 1e9
-        // a miss fails the row rather than report bootstrap-inclusive
-        // wall time as _exec
-        val run = graft.ops.StreamingQueries.lastRuns.getOrElse(q,
-          sys.error(s"$q left no stream run record"))
-        (wall, run.execSec)
-      }
-      def best(dir: String): (Double, Double) = {
-        once(dir) // warm: codegen outside the timer
-        val (w1, e1) = once(dir); val (w2, e2) = once(dir)
-        (math.min(w1, w2), math.min(e1, e2))
-      }
-      val (w1, e1) = best(baseDir)
-      val (wN, eN) = best(streamDir)
-      Seq((q, w1, wN, wN / w1, wN / w1 / factor),
-          (s"${q}_exec", e1, eN, eN / e1, eN / e1 / factor)).map {
-        case r @ (n, t1, tN, g, pr) =>
-          println(f"$n%-22s $t1%8.2f $tN%8.2f $g%7.1fx $pr%7.2fx"); r
-      }
+      // checkpoint inside streamRun). Two rows per query: wall (bootstrap +
+      // exec, the bench convention) and _exec (micro-batch triggerExecution
+      // of the same run) — state-store growth shows in _exec; bootstrap is
+      // scale-invariant fixed cost. A missing record fails the row rather
+      // than report bootstrap-inclusive wall time as _exec.
+      def exec(r: graft.SparkEntry.TimedRun) = r.streams.getOrElse(q,
+        sys.error(s"$q left no stream run record")).execSec
+      val r1 = best(registry(q)(spark, baseDir))
+      val rN = best(registry(q)(spark, streamDir))
+      Seq(row(q, r1.wallSec, rN.wallSec),
+        row(s"${q}_exec", exec(r1), exec(rN)))
     } ++ {
       // The LSH sizing knob, measured: the registered dedup_containment now
       // AUTO-sizes its band width from the corpus count (10-bit ≤1024 docs,
       // 15-bit beyond), so its own row above already shows the auto-sized
       // growth. This extra row is the COUNTERFACTUAL — fixed 10-bit at both
       // scales — quantifying what auto-sizing saves (r5 measured 5.2×).
-      def contain(dir: String, bits: Int): Double = {
-        def run() = graft.SparkEntry.runToCompletion(
-          graft.ops.DedupQueries.containmentPairs(
-            graft.Tables.load(spark, dir, "documents")
-              .filter(col("doc_id") % 10 === 0), bits))
-        run()
-        def once(): Double = {
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime(); run(); (System.nanoTime() - t0) / 1e9
-        }
-        math.min(once(), once())
-      }
-      if (targets.contains("dedup_containment")) {
-        val t1 = contain(baseDir, 10)
-        val tN = contain(outDir, 10)
-        val (growth, perRow) = (tN / t1, tN / t1 / factor)
-        println(f"${"containment_10bit"}%-22s $t1%8.2f $tN%8.2f $growth%7.1fx $perRow%7.2fx")
-        Seq(("containment_10bit", t1, tN, growth, perRow))
-      } else Nil
+      def contain(dir: String) = best(graft.ops.DedupQueries.containmentPairs(
+        graft.Tables.load(spark, dir, "documents")
+          .filter(col("doc_id") % 10 === 0), 10)).wallSec
+      if (targets.contains("dedup_containment"))
+        Seq(row("containment_10bit", contain(baseDir), contain(outDir)))
+      else Nil
     }
     val json = rows.map { case (q, t1, tN, g, pr) =>
       f"""  "$q": {"t_1x": $t1%.3f, "t_${factor}x": $tN%.3f, "growth": $g%.2f, "per_row_cost": $pr%.2f}"""

@@ -39,6 +39,8 @@ class GoldSinkSpec extends AnyFunSuite {
   test("config layer resolves widget-equivalent parameters from env") {
     val cfg = GraftConfig.fromEnv(_ => None)
     assert(cfg.dataSource === "BLOB")
+    assert(cfg.filePath === s"${ops.ParityQueries.FixtureDir}/brfss.csv")
+    assert(cfg.pagesDir === s"${ops.ParityQueries.FixtureDir}/brfss_pages")
     assert(cfg.limit === 10000L && cfg.totalRecords === 93249L)
     assert(cfg.source.isInstanceOf[CsvSource])
     val api = GraftConfig.fromEnv(Map(

@@ -65,4 +65,47 @@ class ObservabilitySpec extends AnyFunSuite {
     SparkEntry.runToCompletion(df)
     assert(acc.value === 100L)
   }
+
+  test("timeRun clears the cache: a cached projection runs in every timed run") {
+    val acc = spark.sparkContext.longAccumulator("cached_udf_calls")
+    val bump = udf { (x: Long) => acc.add(1L); x }
+    def frame = spark.range(0, 100, 1, 4).select(bump(col("id")).as("v")).cache()
+    assert(SparkEntry.timeRun(spark)(frame).isSuccess)
+    assert(SparkEntry.timeRun(spark)(frame).isSuccess)
+    assert(acc.value === 200L, "the second run read the first run's cache")
+  }
+
+  test("timeRun returns a failed run, with no wall time, as a value") {
+    val boom = udf { (x: Long) => if (x >= 0) sys.error("boom"); x }
+    val r = SparkEntry.timeRun(spark)(spark.range(10).select(boom(col("id"))))
+    assert(r.isFailure, "a failed run has no wall time")
+    assert(r.failed.get.getMessage.contains("boom"))
+  }
+
+  test("timeRun returns the stream records of its own run only") {
+    val stream = SparkEntry.timeRun(spark)(
+      SparkEntry.queries("stream_tumbling")(spark, sfDir)).get
+    assert(stream.streams.keySet === Set("stream_tumbling"))
+    assert(stream.streams("stream_tumbling").execSec > 0)
+    val batch = SparkEntry.timeRun(spark)(
+      SparkEntry.queries("q1_pricing")(spark, sfDir)).get
+    assert(batch.streams.isEmpty)
+  }
+
+  test("TimeQuery's job listener records jobs, shuffle bytes and task counts") {
+    val listener = new tools.JobListener
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.runToCompletion(
+        spark.range(0, 1000, 1, 4).groupBy(col("id") % 7).count())
+      org.apache.spark.GraftListenerBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    val jobs = listener.jobs
+    assert(jobs.nonEmpty)
+    assert(jobs.map(_.shuffleWrite).sum > 0L)
+    assert(jobs.map(_.shuffleRead).sum > 0L)
+    assert(jobs.map(_.tasks).sum >= 4, "the 4-partition scan alone runs 4 tasks")
+    jobs.foreach(j => assert(j.tasks === j.stageTasks.values.map(_._1).sum, j))
+  }
 }

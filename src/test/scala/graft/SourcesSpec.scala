@@ -96,6 +96,14 @@ class SourcesSpec extends AnyFunSuite {
     assert(src.load(spark).count() === 400L)
   }
 
+  test("a missing fixture page dir fails, naming its path") {
+    val dir = s"$pagesDir-absent"
+    val e = intercept[java.io.FileNotFoundException] {
+      LocalFixturePageFetcher(dir).fetch(0L, 150L)
+    }
+    assert(e.getMessage.contains(dir))
+  }
+
   test("strict mode upgrades a dropped page to a failure") {
     val src = PagedJsonSource(LocalFixturePageFetcher(pagesDir), 150L, 10000L,
       failOnDroppedPage = true)
